@@ -757,19 +757,19 @@ def _q_value_quantiles_events(spark, sf_dir):
 
 
 def _q_tdigest_events(spark, sf_dir):
-    """Distributed t-digest sketch over events.value (operators/
-    tdigest.py: mapInPandas partials → tree merge).  n/lo/hi are exact
-    digest fields the oracle recomputes directly; the approximate
-    quantiles are asserted via partition-layout-independent *rank-error*
-    bounds (|empirical CDF at the estimate − q| < 0.01, the t-digest
-    guarantee at δ=200), so the booleans are stable even though the
-    estimates themselves depend on merge order."""
-    from snowy_json_spark.operators.tdigest import TDigest, tdigest_sketch
+    """The tdigest_drift quantile grid over events.value (operators/
+    drift.py: ``percentile_approx`` at 0, 0.001, ..., 1).  n and the
+    grid endpoints lo/hi are exact, so the oracle recomputes them
+    directly; the interior quantiles are asserted via
+    partition-layout-independent *rank-error* bounds (|empirical CDF at
+    the estimate − q| < 0.01), so the booleans are stable even if the
+    estimates themselves moved."""
+    from snowy_json_spark.operators.drift import GRID_PROBS, grid_snapshot, quantiles
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    row = tdigest_sketch(ev, "value", delta=200.0).first()
-    d = TDigest.from_row(row)
-    q25, q50, q99 = (float(x) for x in d.quantile([0.25, 0.5, 0.99]))
+    row = grid_snapshot(quantiles(ev, "value", GRID_PROBS).first())
+    grid = row["grid"]
+    q25, q50, q99 = grid[250], grid[500], grid[990]
     n = F.count("value")
     rank = lambda est: F.sum((F.col("value") <= F.lit(est)).cast("long")) / n  # noqa: E731
     checks = ev.agg(
@@ -779,8 +779,8 @@ def _q_tdigest_events(spark, sf_dir):
     )
     return checks.select(
         F.lit(int(row["n"])).cast("long").alias("n_values"),
-        F.round(F.lit(float(row["lo"])), 6).alias("lo"),
-        F.round(F.lit(float(row["hi"])), 6).alias("hi"),
+        F.round(F.lit(grid[0]), 6).alias("lo"),
+        F.round(F.lit(grid[-1]), 6).alias("hi"),
         "q25_rank_ok",
         "q50_rank_ok",
         "q99_rank_ok",
@@ -3612,10 +3612,10 @@ def oracle_sql() -> dict[str, str]:
               FROM d ORDER BY cos DESC, vec_id LIMIT 10
             ) ORDER BY vec_id
         """,
-        # n/lo/hi come out of the digest row itself (exact by
-        # construction — stage-1 tracks them alongside the centroids);
-        # the rank-ok booleans are TRUE whenever the digest honors its
-        # rank-error guarantee, independent of partition layout.
+        # n/lo/hi come out of the quantile grid itself (the count and
+        # the grid's exact 0 and 1 endpoints); the rank-ok booleans are
+        # TRUE whenever the grid honors its rank-error guarantee,
+        # independent of partition layout.
         "tdigest_events": """
             SELECT COUNT(value) AS n_values,
                    ROUND(MIN(value), 6) AS lo,

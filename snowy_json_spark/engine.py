@@ -34,16 +34,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.drift import (
+    GRID_PROBS,
     DriftThresholds,
     HistogramSpec,
+    checked_grid,
     collect_histogram,
     collect_quantiles,
     drift_verdicts,
+    grid_ks,
+    grid_snapshot,
     quantile_drift_verdict,
+    quantiles,
 )
 from .operators.referential import referential_violations
 from .operators.stats import ColumnStatsSpec, column_stats, stats_violations
-from .operators.uniqueness import duplicate_keys_salted, uniqueness_violations
+from .operators.uniqueness import uniqueness_violations
 from .plans.compiler import Compiled, Options, SpecError, compile_spec
 from .plans.report import (
     VIOLATION_COLUMNS,
@@ -75,19 +80,6 @@ def _schema_violations(schema, chk: dict, cid: str) -> list[tuple]:
             if name not in expected:
                 out.append((f"{cid}/{name}", f"#/{name}", "unexpected_column"))
     return sorted(out)
-
-
-def _digest_dict(row) -> dict:
-    """JSON-serializable t-digest (snapshot format); empty-input safe."""
-    if row is None:
-        return {"means": [], "weights": [], "n": 0, "lo": 0.0, "hi": 0.0}
-    return {
-        "means": [float(x) for x in row["means"]],
-        "weights": [float(x) for x in row["weights"]],
-        "n": int(row["n"]),
-        "lo": float(row["lo"]),
-        "hi": float(row["hi"]),
-    }
 
 
 @dataclass
@@ -307,11 +299,9 @@ class ValidationEngine:
                 v["quantiles"] = cur_q
                 drift_out.append(v)
             elif kind == "tdigest_drift":
-                # north-star drift variant: t-digest sketch vs the
-                # reference snapshot's digest, KS on the digest CDFs
-                # (tail-accurate where fixed-bucket histograms are not)
-                from .operators.tdigest import TDigest, tdigest_ks, tdigest_sketch
-
+                # north-star drift variant: the current quantile grid vs
+                # the reference snapshot's grid, KS on the grid CDFs
+                # (tail-resolving where fixed-bucket histograms are not)
                 expr = chk.get("expr")
                 src = df.withColumn(chk["column"], F.expr(expr)) if expr else df
                 snap = (snapshot or {}).get(chk.get("id"))
@@ -327,14 +317,13 @@ class ValidationEngine:
                     v["check_id"] = chk.get("id")
                     drift_out.append(v)
                     continue
-                cur = _digest_dict(
-                    tdigest_sketch(src, chk["column"], chk.get("delta", 200.0)).first()
-                )
+                snap = checked_grid(snap, chk.get("id"))
+                cur = grid_snapshot(quantiles(src, chk["column"], GRID_PROBS).first())
                 if cur["n"] == 0 or snap["n"] == 0:
                     v = {"group": None, "psi": None, "ks": None,
                          "status": "missing_current" if cur["n"] == 0 else "missing_snapshot"}
                 else:
-                    k = tdigest_ks(TDigest(**cur), TDigest(**snap))
+                    k = grid_ks(cur["grid"], snap["grid"])
                     v = {
                         "group": None,
                         "psi": None,
@@ -597,10 +586,8 @@ class ValidationEngine:
                 probs = chk.get("probs", [0.25, 0.5, 0.75, 0.9, 0.99])
                 snap[chk["id"]] = collect_quantiles(src, chk["column"], probs)
             elif kind == "tdigest_drift":
-                from .operators.tdigest import tdigest_sketch
-
-                snap[chk["id"]] = _digest_dict(
-                    tdigest_sketch(src, chk["column"], chk.get("delta", 200.0)).first()
+                snap[chk["id"]] = grid_snapshot(
+                    quantiles(src, chk["column"], GRID_PROBS).first()
                 )
         return snap
 

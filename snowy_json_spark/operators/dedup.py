@@ -611,30 +611,9 @@ def exact_jaccard_for_pairs(
 # ---------------------------------------------------------------------------
 
 
-def simhash64(col: Column) -> Column:
-    """64-bit SimHash over word hashes, pure JVM-side.
-
-    bit_i = sign( sum_words (word_hash bit_i ? +1 : -1) ); computed via
-    aggregate over the 64 bit positions with shiftright/bitwise-and."""
-    words = F.filter(F.split(normalized_text(col), " "), lambda w: w != "")
-    hashes = F.transform(words, lambda w: F.xxhash64(w))
-    bits = []
-    for i in range(64):
-        vote = F.aggregate(
-            hashes,
-            F.lit(0).cast("long"),
-            lambda acc, h, i=i: acc + (F.shiftright(h, i).bitwiseAND(F.lit(1)) * 2 - 1),
-        )
-        bits.append(F.when(vote > 0, F.lit(1).cast("long")).otherwise(F.lit(0)).alias(f"b{i}"))
-    out = F.lit(0).cast("long")
-    for i, b in enumerate(bits):
-        out = out.bitwiseOR(F.shiftleft(b, i))
-    return out
-
-
 def simhash64_udf():
-    """numpy-batched SimHash — the fast path (64 aggregate passes of the
-    Column version are O(64·words); numpy does one matrix op)."""
+    """numpy-batched SimHash: one matrix op per batch (a pure-Column
+    version needs 64 aggregate passes, O(64·words))."""
 
     def batch(hash_arrays: pd.Series) -> pd.Series:
         out = np.zeros(len(hash_arrays), dtype=np.int64)

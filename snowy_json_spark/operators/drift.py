@@ -11,7 +11,12 @@ Scale design:
   (Deliberately floor-arithmetic, not ``width_bucket``, so the DuckDB
   oracle can evaluate the identical expression.)
 - Quantiles via ``percentile_approx`` (single-pass, mergeable GK
-  sketch).  Categorical frequencies via plain groupBy counts.
+  sketch) — the one quantile mechanism.  ``quantile_drift`` compares
+  values at a few probabilities; ``tdigest_drift`` (and its streaming
+  twins in streaming/stateful.py) stores the full grid at 0, 0.001, ...,
+  1 and compares two grids by KS (``grid_ks``).  The grid is exact at
+  the min and max and deterministic run to run, so ``metrics.json``
+  stays byte-stable.
 - PSI/KS are computed **driver-side with numpy on the tiny aggregated
   histograms** — never on raw rows.  The reference snapshot is a few
   KB and rides along as a broadcast/local dict.
@@ -22,8 +27,15 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..plans.compiler import SpecError
+
+#: ``tdigest_drift`` snapshots: ``percentile_approx`` at 0, 0.001, ..., 1
+GRID_PROBS = [i / 1000 for i in range(1001)]
+GRID_FORMAT = "quantile-grid-v1"
 
 
 @dataclass
@@ -59,18 +71,14 @@ def histogram(
     )
 
 
-def category_frequencies(
-    df: DataFrame, column: str, group_by: list[str] | None = None
-) -> DataFrame:
-    keys = (group_by or []) + [column]
-    return df.groupBy(*keys).agg(F.count(F.lit(1)).alias("cat_count"))
-
-
 def quantiles(
     df: DataFrame, column: str, probs: list[float], accuracy: int = 10000
 ) -> DataFrame:
+    """One row: the non-null count ``n`` and ``percentile_approx`` at
+    ``probs`` (null on an empty column)."""
     return df.agg(
-        F.percentile_approx(F.col(column), probs, accuracy).alias("quantiles")
+        F.count(F.col(column)).alias("n"),
+        F.percentile_approx(F.col(column), probs, accuracy).alias("quantiles"),
     )
 
 
@@ -104,6 +112,23 @@ def ks_statistic(expected: list[float], actual: list[float]) -> float:
         ca += a / ta
         best = max(best, abs(ce - ca))
     return best
+
+
+def grid_ks(a: list[float], b: list[float]) -> float:
+    """Two-sample KS statistic between two quantile grids (values at
+    evenly spaced probabilities 0..1, as in a ``tdigest_drift``
+    snapshot).  Each grid is read as the step CDF F(x) = max{p : q_p <= x},
+    which is within one grid step of the true CDF, ties included; the sup
+    gap is taken over every grid value, where the steps change."""
+    if not len(a) or not len(b):
+        raise ValueError("grid_ks: no non-null values")
+    xs = np.union1d(a, b)
+
+    def cdf(q: list[float]) -> np.ndarray:
+        below = np.searchsorted(np.asarray(q, dtype="float64"), xs, side="right")
+        return np.maximum(below - 1, 0) / (len(q) - 1)
+
+    return float(np.max(np.abs(cdf(a) - cdf(b))))
 
 
 @dataclass
@@ -180,6 +205,30 @@ def collect_quantiles(
     row = quantiles(df.filter(F.col(column).isNotNull()), column, probs, accuracy).collect()[0]
     vals = row["quantiles"] or []
     return {str(p): float(v) for p, v in zip(probs, vals)}
+
+
+def grid_snapshot(row) -> dict:
+    """``tdigest_drift`` snapshot entry from a collected ``quantiles``
+    row over ``GRID_PROBS``: JSON-serializable and tagged with
+    ``GRID_FORMAT``."""
+    return {
+        "format": GRID_FORMAT,
+        "n": int(row["n"]),
+        "grid": [float(v) for v in row["quantiles"] or []],
+    }
+
+
+def checked_grid(entry, name: str) -> dict:
+    """``entry`` if it is a ``GRID_FORMAT`` snapshot; any other shape (a
+    t-digest ``{means, weights, n, lo, hi}`` from older releases, say)
+    raises ``SpecError`` naming the entry, so a stale baseline can never
+    read as missing or as a KS=0 pass."""
+    if not isinstance(entry, dict) or entry.get("format") != GRID_FORMAT:
+        raise SpecError(
+            f"snapshot entry {name!r} is not a {GRID_FORMAT} quantile grid; "
+            "collect the snapshot again"
+        )
+    return entry
 
 
 def collect_histogram(

@@ -44,7 +44,7 @@ def page_rank(
     dst_col: str = "dst",
     n_iter: int = 10,
     damping: float = 0.85,
-    checkpoint_every: int = 4,
+    checkpoint_every: int | None = None,
     redistribute_dangling: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank; returns ``(node, rank)`` for every
@@ -59,10 +59,10 @@ def page_rank(
     + dangling mass), so lineage would double per round without a
     per-iteration ``localCheckpoint`` — iterations serialize through
     executor storage, a documented throughput cost vs the default
-    every-``checkpoint_every`` truncation.  A non-default
+    every-``checkpoint_every`` truncation (default 4).  Any explicit
     ``checkpoint_every`` combined with ``redistribute_dangling`` warns,
     since it will not be honored."""
-    if redistribute_dangling and checkpoint_every != 4:
+    if redistribute_dangling and checkpoint_every is not None:
         import warnings
 
         warnings.warn(
@@ -74,6 +74,8 @@ def page_rank(
         raise ValueError(f"n_iter must be >= 0, got {n_iter}")
     if not 0.0 <= damping <= 1.0:
         raise ValueError(f"damping must be in [0, 1], got {damping}")
+    if checkpoint_every is None:
+        checkpoint_every = 4
     e = edges.select(
         F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst")
     )

@@ -204,7 +204,7 @@ def dsir_select(
     ``keep_empty``, never null).  A deterministic-threshold variant of
     DSIR's importance resampling — thresholding is reproducible and
     resumable where Gumbel sampling is not, and the threshold is the
-    quantile knob: pick it from :mod:`drift`'s t-digest over
+    quantile knob: pick it from :mod:`drift`'s quantiles over
     ``log_ratio`` to hit a token budget."""
     scores = log_likelihood_ratio(
         df, id_col, text_col, target_vocab, target_oov_logp,

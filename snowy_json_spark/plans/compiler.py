@@ -1757,10 +1757,3 @@ def compile_spec(
     return Compiler(spec, options, registry=registry).compile_row(
         schema, collect=collect
     )
-
-
-def spec_from_json(text: str) -> dict:
-    try:
-        return json.loads(text)
-    except json.JSONDecodeError as e:
-        raise SpecError(f"spec is not valid JSON: {e}") from e

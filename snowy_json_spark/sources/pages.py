@@ -142,20 +142,3 @@ def lang_ref(spark: SparkSession) -> DataFrame:
     codes = ["en", "de", "fr", "es", "zh", "pt", "it", "nl", "ru", "ja"]
     return spark.createDataFrame([(c,) for c in codes], "lang string")
 
-
-def host_ref(spark: SparkSession, n_hosts: int = N_HOSTS) -> DataFrame:
-    """Allowlisted hosts dim."""
-    return spark.range(n_hosts).select(
-        F.concat(F.lit("host"), F.col("id").cast("string"), F.lit(".example.org")).alias(
-            "host"
-        )
-    )
-
-
-def write_pages(
-    spark: SparkSession, path: str, n_rows: int, n_partitions: int = 32
-) -> None:
-    """Materialize a pages table partitioned by (lang, url_bucket) —
-    the local parquet stand-in for the Iceberg layout."""
-    df = with_partition_cols(generate_pages(spark, n_rows, n_partitions))
-    df.write.mode("overwrite").partitionBy("lang", "url_bucket").parquet(path)

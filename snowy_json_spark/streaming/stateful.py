@@ -7,6 +7,10 @@ rows, failed rows, violation rate since stream start) — unlike a
 windowed aggregate, the state never resets, and unlike
 ``outputMode('complete')`` aggregation, state size is one tuple per
 key, not per (key, window).
+
+The running-quantile operators (``running_tdigest``,
+``stream_tdigest_drift``) need no custom state: they are plain streaming
+``groupBy(key)`` aggregations over ``percentile_approx``.
 """
 
 from __future__ import annotations
@@ -18,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..operators.drift import GRID_PROBS, checked_grid, grid_ks
 from ..plans.compiler import Options, compile_spec
 
 OUTPUT_SCHEMA = "key string, total long, failed long, violation_rate double"
@@ -66,89 +71,35 @@ def running_violation_stats(
     )
 
 
-def _accumulate_digest_state(state: GroupState, pdfs, delta: float):
-    """Shared digest-state accumulator for the stateful t-digest
-    operators: load state, fold each Arrow batch into the centroids,
-    persist, and return (means, weights, n, lo, hi) — or None when no
-    values have been seen yet."""
-    import numpy as np
-
-    from ..operators.tdigest import _compress
-
-    if state.exists:
-        means, weights, n, lo, hi = state.get
-        m = np.asarray(means, dtype="float64")
-        w = np.asarray(weights, dtype="float64")
-    else:
-        m = w = np.empty(0, dtype="float64")
-        n, lo, hi = 0, None, None
-    for pdf in pdfs:
-        v = pdf["_v"].to_numpy(dtype="float64", na_value=np.nan)
-        v = v[~np.isnan(v)]
-        if v.size == 0:
-            continue
-        m = np.concatenate([m, v])
-        w = np.concatenate([w, np.ones_like(v)])
-        m, w = _compress(m, w, delta)
-        n += int(v.size)
-        lo = float(v.min()) if lo is None else min(lo, float(v.min()))
-        hi = float(v.max()) if hi is None else max(hi, float(v.max()))
-    if n == 0:
-        return None
-    state.update((list(map(float, m)), list(map(float, w)), n, lo, hi))
-    return m, w, n, lo, hi
-
-
-TDIGEST_OUTPUT_SCHEMA = (
-    "key string, n long, lo double, hi double, p50 double, p99 double"
-)
-TDIGEST_STATE_SCHEMA = (
-    "means array<double>, weights array<double>, n long, lo double, hi double"
-)
-
-
-def running_tdigest(
-    stream_df: DataFrame,
-    value_col: str,
-    key_col: str,
-    delta: float = 200.0,
-) -> DataFrame:
-    """Per-key running t-digest over the whole stream lifetime:
-    emits (key, n, lo, hi, p50, p99) after every batch.
-
-    The windowless analog of percentile monitoring: state per key is
-    the digest itself (≤ ~2δ centroids, a few KB) — never the values —
-    so a key that has seen 10^9 rows costs the same state as one that
-    has seen 10^3.  Batch values are compressed INTO the existing
-    centroids with the same numpy merge as the batch sketch
-    (operators/tdigest.py), so stream and batch digests agree."""
-    from ..operators.tdigest import TDigest
-
-    src = stream_df.select(
+def _keyed_values(stream_df: DataFrame, value_col: str, key_col: str) -> DataFrame:
+    return stream_df.select(
         F.col(key_col).cast("string").alias("key"),
         F.col(value_col).cast("double").alias("_v"),
-    )
+    ).filter(F.col("_v").isNotNull())
 
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        acc = _accumulate_digest_state(state, pdfs, delta)
-        if acc is None:
-            return
-        m, w, n, lo, hi = acc
-        d = TDigest(m, w, n, lo, hi)
-        p50, p99 = (float(x) for x in d.quantile([0.5, 0.99]))
-        yield pd.DataFrame(
-            {"key": [key[0]], "n": [n], "lo": [lo], "hi": [hi],
-             "p50": [p50], "p99": [p99]}
+
+def running_tdigest(stream_df: DataFrame, value_col: str, key_col: str) -> DataFrame:
+    """Per-key running quantiles over the whole stream lifetime:
+    emits (key, n, lo, hi, p50, p99) for every key a batch updates.
+
+    The windowless analog of percentile monitoring: a plain streaming
+    ``groupBy(key)`` aggregation (run it in ``update`` mode) whose state
+    per key is the ``percentile_approx`` sketch — never the values — so
+    a key that has seen 10^9 rows costs about the same state as one that
+    has seen 10^3.  Keys with no non-null values emit nothing."""
+    return (
+        _keyed_values(stream_df, value_col, key_col)
+        .groupBy("key")
+        .agg(
+            F.count("_v").alias("n"),
+            F.min("_v").alias("lo"),
+            F.max("_v").alias("hi"),
+            F.percentile_approx("_v", [0.5, 0.99], 10000).alias("_q"),
         )
-
-    return src.groupBy("key").applyInPandasWithState(
-        update,
-        TDIGEST_OUTPUT_SCHEMA,
-        TDIGEST_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
+        .select(
+            "key", "n", "lo", "hi",
+            F.col("_q")[0].alias("p50"), F.col("_q")[1].alias("p99"),
+        )
     )
 
 
@@ -158,47 +109,40 @@ def stream_tdigest_drift(
     key_col: str,
     snapshot: dict,
     ks_fail: float = 0.2,
-    delta: float = 200.0,
 ) -> DataFrame:
-    """Streaming drift verdicts: a per-key running digest compared
-    against a reference snapshot digest after every batch —
+    """Streaming drift verdicts: a per-key running quantile grid compared
+    against a reference snapshot grid after every batch —
     (key, n, ks, status) with status pass / fail / missing_snapshot.
 
     The streaming closure of the batch ``tdigest_drift`` table check:
-    ``snapshot`` is the engine's ``collect_snapshot`` digest dict
-    (means/weights/n/lo/hi per key), broadcast by closure capture;
-    state per key is the running digest only (≤ ~2δ centroids)."""
-    from ..operators.tdigest import TDigest, tdigest_ks
+    ``snapshot`` maps each key to a ``collect_snapshot``-format grid
+    entry (a stale entry of any other format raises ``SpecError`` here,
+    before the stream starts), broadcast by closure capture.  The grid
+    is a streaming ``groupBy(key)`` aggregation (``update`` mode); the
+    KS against the key's reference is the batch check's ``grid_ks``."""
+    entries = {k: checked_grid(v, k) for k, v in snapshot.items()}
+    refs = {k: e["grid"] for k, e in entries.items() if e["n"]}
 
-    refs = {
-        k: TDigest(v["means"], v["weights"], v["n"], v["lo"], v["hi"])
-        for k, v in snapshot.items()
-        if v.get("n")
-    }
-    src = stream_df.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(value_col).cast("double").alias("_v"),
-    )
-    out_schema = "key string, n long, ks double, status string"
-    state_schema = (
-        "means array<double>, weights array<double>, n long, lo double, hi double"
-    )
+    @F.udf("double")
+    def ks(key, grid):
+        ref = refs.get(key)
+        return None if ref is None else grid_ks(grid, ref)
 
-    def update(key, pdfs, state: GroupState):
-        acc = _accumulate_digest_state(state, pdfs, delta)
-        if acc is None:
-            return
-        m, w, n, lo, hi = acc
-        ref = refs.get(key[0])
-        if ref is None:
-            ks, status = None, "missing_snapshot"
-        else:
-            ks = tdigest_ks(TDigest(m, w, n, lo, hi), ref)
-            status = "fail" if ks >= ks_fail else "pass"
-        yield pd.DataFrame(
-            {"key": [key[0]], "n": [n], "ks": [ks], "status": [status]}
+    grids = (
+        _keyed_values(stream_df, value_col, key_col)
+        .groupBy("key")
+        .agg(
+            F.count("_v").alias("n"),
+            F.percentile_approx("_v", GRID_PROBS, 10000).alias("_grid"),
         )
-
-    return src.groupBy("key").applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+        .select("key", "n", ks("key", "_grid").alias("ks"))
+    )
+    return grids.select(
+        "key",
+        "n",
+        "ks",
+        F.when(F.col("ks").isNull(), "missing_snapshot")
+        .when(F.col("ks") >= ks_fail, "fail")
+        .otherwise("pass")
+        .alias("status"),
     )

@@ -141,11 +141,20 @@ def test_pagerank_redistribution_no_sinks_matches_default(spark):
         assert abs(a[k] - b[k]) < 1e-12
 
 
-def test_pagerank_redistribution_lineage_stays_linear(spark):
+@pytest.mark.parametrize(
+    "kwargs, warns",
+    [({"checkpoint_every": 0}, True), ({"checkpoint_every": 4}, True), ({}, False)],
+    ids=["explicit0", "explicit4", "default"],
+)
+def test_pagerank_redistribution_lineage_stays_linear(spark, kwargs, warns):
     """Regression (round-5 review): the redistribution path reads the
     previous ranks twice per iteration, which doubled the logical plan
     between checkpoints — with checkpoint_every=0 the plan grew 2^n.
-    The per-iteration truncation keeps many iterations cheap."""
+    The per-iteration truncation keeps many iterations cheap.  It
+    ignores checkpoint_every, so any explicit value (the default's 4
+    included) warns and the default does not."""
+    import warnings
+
     from pyspark.sql import functions as F
 
     from snowy_json_spark.operators.graph import page_rank
@@ -153,8 +162,10 @@ def test_pagerank_redistribution_lineage_stays_linear(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (2, 4)], "src long, dst long"
     )
-    out = page_rank(
-        edges, n_iter=18, checkpoint_every=0, redistribute_dangling=True
-    )
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        out = page_rank(edges, n_iter=18, redistribute_dangling=True, **kwargs)
+    ignored = [w for w in caught if "checkpoint_every is ignored" in str(w.message)]
+    assert bool(ignored) == warns
     total = out.agg(F.sum("rank")).first()[0]
     assert abs(total - 4) < 1e-9

@@ -95,11 +95,12 @@ def test_filter_pushdown_reaches_scan(spark, pages):
 
 
 def test_tdigest_scan_prunes_to_value_column(spark, pages):
-    """The t-digest partial stage must scan ONLY the sketched column —
-    the wide source (html binary) never crosses into the Arrow batches."""
-    from snowy_json_spark.operators.tdigest import tdigest_sketch
+    """The tdigest_drift grid aggregate must scan ONLY the sketched
+    column — the wide source (html binary) is never read."""
+    from snowy_json_spark.operators.drift import GRID_PROBS, quantiles
 
-    p = explain(tdigest_sketch(pages.withColumn("tl", F.length("text")), "tl"))
+    p = explain(quantiles(pages.withColumn("tl", F.length("text")), "tl", GRID_PROBS))
+    assert read_schema_lines(p), p
     for line in read_schema_lines(p):
         assert "html" not in line, line
         assert "url" not in line, line

@@ -71,6 +71,9 @@ def test_running_tdigest_stream(spark):
         )
     )
     digests = running_tdigest(stream, "x", "k")
+    assert digests.schema.simpleString() == (
+        "struct<key:string,n:bigint,lo:double,hi:double,p50:double,p99:double>"
+    )
     q = (
         digests.writeStream.format("memory")
         .queryName("tdigest_stream")
@@ -104,15 +107,18 @@ def test_running_tdigest_stream(spark):
 def test_stream_tdigest_drift(spark):
     import numpy as np
 
-    from snowy_json_spark.operators.tdigest import _compress
+    from snowy_json_spark.engine import ValidationEngine
     from snowy_json_spark.streaming.stateful import stream_tdigest_drift
 
     # reference snapshots: key 'a' matches the stream (uniform 0..999),
-    # key 'b' is shifted 3x; key 'c' absent from the snapshot
+    # key 'b' is shifted 3x; key 'c' absent from the snapshot.  Each is
+    # the batch tdigest_drift check's own collect_snapshot entry.
     def digest_of(vals):
-        m, w = _compress(vals, np.ones_like(vals), 200.0)
-        return {"means": list(m), "weights": list(w), "n": len(vals),
-                "lo": float(vals.min()), "hi": float(vals.max())}
+        eng = ValidationEngine(
+            {"x-table-checks": [{"id": "ref", "kind": "tdigest_drift", "column": "x"}]}
+        )
+        df = spark.createDataFrame([(float(v),) for v in vals], "x double")
+        return eng.collect_snapshot(df)["ref"]
 
     u = np.arange(20_000, dtype="float64") % 1000
     snapshot = {"a": digest_of(u), "b": digest_of(u * 3.0)}
@@ -129,6 +135,9 @@ def test_stream_tdigest_drift(spark):
         )
     )
     drift = stream_tdigest_drift(stream, "x", "k", snapshot, ks_fail=0.2)
+    assert drift.schema.simpleString() == (
+        "struct<key:string,n:bigint,ks:double,status:string>"
+    )
     q = (
         drift.writeStream.format("memory")
         .queryName("drift_stream")

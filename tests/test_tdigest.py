@@ -1,17 +1,18 @@
-"""t-digest sketch: accuracy vs exact quantiles, distributed-vs-local
-merge agreement, exact endpoints, and the KS drift statistic."""
+"""tdigest_drift quantile grid (``percentile_approx`` at 0, 0.001, ..., 1):
+accuracy vs exact quantiles, agreement across partition layouts, exact
+endpoints, and the grid KS drift statistic."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
-from snowy_json_spark.operators.tdigest import (
-    TDigest,
-    _compress,
-    tdigest_ks,
-    tdigest_quantiles,
-    tdigest_sketch,
+from snowy_json_spark.operators.drift import (
+    GRID_FORMAT,
+    GRID_PROBS,
+    grid_ks,
+    grid_snapshot,
+    quantiles,
 )
 
 PROBS = [0.01, 0.05, 0.25, 0.5, 0.75, 0.95, 0.99, 0.999]
@@ -22,9 +23,17 @@ def _lognormal(n: int, seed: int = 7) -> np.ndarray:
 
 
 def _rank_error(values: np.ndarray, estimate: float, q: float) -> float:
-    """|empirical CDF at the estimate − q| — the t-digest guarantee is on
+    """|empirical CDF at the estimate − q| — the sketch guarantee is on
     rank, not value."""
     return abs(np.searchsorted(np.sort(values), estimate) / len(values) - q)
+
+
+def _grid(df, column: str = "x") -> dict:
+    return grid_snapshot(quantiles(df, column, GRID_PROBS).first())
+
+
+def _at(grid: list[float], q: float) -> float:
+    return grid[round(q * (len(grid) - 1))]
 
 
 @pytest.fixture(scope="module")
@@ -36,72 +45,66 @@ def skewed_df(spark):
     return df, vals
 
 
-def test_compress_bounds_centroid_count():
-    v = _lognormal(100_000)
-    m, w = _compress(v, np.ones_like(v), delta=100.0)
-    assert len(m) <= 220  # ~2δ bound for the k1 scale function
-    assert w.sum() == pytest.approx(100_000)
-    assert np.all(np.diff(m) >= 0)
-
-
 def test_quantile_rank_accuracy(skewed_df):
     df, vals = skewed_df
-    est = tdigest_quantiles(df, "x", PROBS, delta=200.0)
-    for q, e in zip(PROBS, est):
+    snap = _grid(df)
+    assert snap["format"] == GRID_FORMAT and len(snap["grid"]) == len(GRID_PROBS)
+    for q in PROBS:
+        e = _at(snap["grid"], q)
         # relative rank error: tight at the tails, loose mid-stream
         tol = max(0.005, 0.02 * min(q, 1 - q) / 0.25)
         assert _rank_error(vals, e, q) <= tol, (q, e)
 
 
-def test_distributed_merge_matches_local(skewed_df):
+def test_same_result_across_partitionings(skewed_df):
     df, vals = skewed_df
-    row = tdigest_sketch(df, "x", delta=200.0, fanin=4).first()
-    dist = TDigest.from_row(row)
-    m, w = _compress(vals, np.ones_like(vals), 200.0)
-    local = TDigest(m, w, len(vals), vals.min(), vals.max())
-    assert row["n"] == len(vals)
-    qs = np.asarray(PROBS)
-    # both sides are within rank tolerance of the truth, so of each other
-    for q, d_est, l_est in zip(PROBS, dist.quantile(qs), local.quantile(qs)):
-        assert _rank_error(vals, float(d_est), q) <= 0.01
-        assert _rank_error(vals, float(l_est), q) <= 0.01
+    one, eight = _grid(df.repartition(1)), _grid(df.repartition(8))
+    assert one["n"] == eight["n"] == len(vals)
+    # the merge order differs, so interior values may move within the
+    # sketch's rank error — never further, and never at the endpoints
+    assert (one["grid"][0], one["grid"][-1]) == (eight["grid"][0], eight["grid"][-1])
+    assert grid_ks(one["grid"], eight["grid"]) <= 0.002
+    for q in PROBS:
+        assert _rank_error(vals, _at(one["grid"], q), q) <= 0.01
+        assert _rank_error(vals, _at(eight["grid"], q), q) <= 0.01
 
 
 def test_endpoints_exact(skewed_df):
     df, vals = skewed_df
-    row = tdigest_sketch(df, "x", delta=100.0).first()
-    assert row["lo"] == pytest.approx(vals.min())
-    assert row["hi"] == pytest.approx(vals.max())
-    d = TDigest.from_row(row)
-    assert float(d.quantile(0.0)[0]) == pytest.approx(vals.min())
-    assert float(d.quantile(1.0)[0]) == pytest.approx(vals.max())
+    grid = _grid(df)["grid"]
+    assert grid[0] == pytest.approx(vals.min())
+    assert grid[-1] == pytest.approx(vals.max())
 
 
 def test_nulls_skipped(spark):
     df = spark.createDataFrame(
         [(1.0,), (None,), (2.0,), (None,), (3.0,)], "x double"
     )
-    row = tdigest_sketch(df, "x").first()
-    assert row["n"] == 3
-    assert row["lo"] == 1.0 and row["hi"] == 3.0
+    snap = _grid(df)
+    assert snap["n"] == 3
+    assert snap["grid"][0] == 1.0 and snap["grid"][-1] == 3.0
 
 
-def test_ks_drift_statistic():
+def test_ks_drift_statistic(spark):
     a_vals = _lognormal(30_000, seed=1)
     b_same = _lognormal(30_000, seed=2)
     # theoretical KS for a ×c scale on lognormal(σ) is 2Φ(ln c / 2σ) − 1:
     # ×3 with σ=1.5 gives ≈0.29, comfortably past ks_fail=0.2
     b_shift = a_vals * 3.0
-    mk = lambda v: TDigest(  # noqa: E731
-        *_compress(v, np.ones_like(v), 200.0), len(v), v.min(), v.max()
-    )
-    same = tdigest_ks(mk(a_vals), mk(b_same))
-    shift = tdigest_ks(mk(a_vals), mk(b_shift))
+
+    def mk(v):
+        return _grid(spark.createDataFrame([(float(x),) for x in v], "x double"))["grid"]
+
+    a = mk(a_vals)
+    same = grid_ks(a, mk(b_same))
+    shift = grid_ks(a, mk(b_shift))
     assert same < 0.02  # same distribution → tiny sup-gap
-    assert shift > 0.2  # doubled scale → large, fails DriftThresholds.ks_fail
+    assert shift > 0.2  # tripled scale → large, fails DriftThresholds.ks_fail
 
 
 def test_quantiles_empty_column_raises(spark):
     df = spark.createDataFrame([(None,), (None,)], "x double")
+    snap = _grid(df)
+    assert snap["n"] == 0 and snap["grid"] == []
     with pytest.raises(ValueError, match="no non-null values"):
-        tdigest_quantiles(df, "x", [0.5])
+        grid_ks(snap["grid"], [0.0, 1.0])

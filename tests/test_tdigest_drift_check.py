@@ -4,6 +4,10 @@ through the full engine surface."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
+
+from snowy_json_spark.operators.drift import GRID_FORMAT, GRID_PROBS
+from snowy_json_spark.plans.compiler import SpecError
 
 
 def _engine(spec_checks):
@@ -51,8 +55,12 @@ def test_snapshot_roundtrips_as_json(spark, tmp_path):
     p = str(tmp_path / "snap.json")
     ValidationEngine.save_snapshot(snap, p)
     loaded = ValidationEngine.load_snapshot(p)
-    assert loaded["x_tdigest"]["n"] == 20_000
-    assert len(loaded["x_tdigest"]["means"]) > 50
+    assert loaded == snap
+    entry = loaded["x_tdigest"]
+    assert entry["format"] == GRID_FORMAT
+    assert entry["n"] == 20_000
+    assert len(entry["grid"]) == len(GRID_PROBS)
+    assert entry["grid"] == sorted(entry["grid"])
 
 
 def test_single_pass_projects_tdigest_input(spark, tmp_path):
@@ -96,3 +104,44 @@ def test_absent_snapshot_entry_is_not_a_pass(spark):
         d = [v for v in res.drift if v["check_id"] == "x_tdigest"]
         assert d[0]["status"] == "missing_snapshot"
         assert d[0]["ks"] is None
+
+
+#: the t-digest snapshot entry older releases wrote
+OLD_DIGEST = {"means": [1.0, 2.0], "weights": [1.0, 1.0], "n": 2, "lo": 1.0, "hi": 2.0}
+
+
+@pytest.mark.parametrize("entry", ["run", "run_single_pass", "stream_tdigest_drift"])
+def test_old_snapshot_format_raises(spark, tmp_path, entry):
+    """A baseline entry without the grid format tag (the t-digest shape
+    included) must fail loudly, naming the check — never read as
+    missing_snapshot or compare into a KS=0 pass."""
+    snapshot = {"x_tdigest": OLD_DIGEST}
+    with pytest.raises(SpecError, match="x_tdigest"):
+        if entry == "stream_tdigest_drift":
+            from snowy_json_spark.streaming.stateful import stream_tdigest_drift
+
+            stream = spark.readStream.format("rate").load().selectExpr(
+                "'x_tdigest' AS k", "CAST(value AS DOUBLE) AS x"
+            )
+            stream_tdigest_drift(stream, "x", "k", snapshot)
+        elif entry == "run":
+            _engine(CHECKS).run(_df(spark, n=2_000), snapshot=snapshot)
+        else:
+            _engine(CHECKS).run_single_pass(
+                _df(spark, n=2_000), str(tmp_path / "out"), snapshot=snapshot
+            )
+
+
+def test_single_pass_metrics_byte_stable(spark, tmp_path):
+    """Two back-to-back run_single_pass + write_results calls on the same
+    input write byte-identical metrics.json, tdigest_drift KS included."""
+    eng = _engine(CHECKS)
+    snap = eng.collect_snapshot(_df(spark, seed=5))
+    written = []
+    for rep in ("a", "b"):
+        out = str(tmp_path / rep)
+        res = eng.run_single_pass(_df(spark, seed=6), out + "/work", snapshot=snap)
+        assert [v["status"] for v in res.drift] == ["pass"]
+        eng.write_results(res, out)
+        written.append((tmp_path / rep / "metrics.json").read_bytes())
+    assert written[0] == written[1]
