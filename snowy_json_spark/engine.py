@@ -57,6 +57,7 @@ from .plans.report import (
     violations,
     with_verdict,
 )
+from .sources.tables import local_frame
 from .streaming.manifest import Manifest, lineage_hash, partition_key_expr
 
 
@@ -165,6 +166,9 @@ class ValidationEngine:
         drift_out: list[dict] = []
         stats_out: dict = {}
         empty_ids = [F.lit(None).cast("string").alias(c) for c in self.id_cols]
+        # table-scope violation rows built on the driver: no id values
+        no_ids = (None,) * len(self.id_cols)
+        viol_ddl = ", ".join(f"{c} string" for c in self.id_cols + VIOLATION_COLUMNS)
 
         for chk in table_checks if table_checks is not None else self.table_checks:
             kind = chk.get("kind")
@@ -175,13 +179,7 @@ class ValidationEngine:
                 svs = _schema_violations(df.schema, chk, cid)
                 if svs:
                     tv_parts.append(
-                        spark.createDataFrame(
-                            [tuple([None] * len(self.id_cols)) + s for s in svs],
-                            ", ".join(
-                                [f"{c} string" for c in self.id_cols]
-                                + [f"{c} string" for c in VIOLATION_COLUMNS]
-                            ),
-                        )
+                        local_frame(spark, [no_ids + s for s in svs], viol_ddl)
                     )
             elif kind == "unique":
                 keys = chk["keys"]
@@ -235,20 +233,10 @@ class ValidationEngine:
                 svs = stats_violations(row, [spec])
                 if svs:
                     tv_parts.append(
-                        spark.createDataFrame(
-                            [
-                                tuple([None] * len(self.id_cols))
-                                + (
-                                    s["constraint_id"],
-                                    s["instance_path"],
-                                    s["observed_value"],
-                                )
-                                for s in svs
-                            ],
-                            ", ".join(
-                                [f"{c} string" for c in self.id_cols]
-                                + [f"{c} string" for c in VIOLATION_COLUMNS]
-                            ),
+                        local_frame(
+                            spark,
+                            [no_ids + tuple(s[c] for c in VIOLATION_COLUMNS) for s in svs],
+                            viol_ddl,
                         )
                     )
             elif kind == "drift":
@@ -400,8 +388,8 @@ class ValidationEngine:
         skipped = sorted(set(all_keys) & done)
         if not pending:
             empty = ValidationResult(
-                verdicts=spark.createDataFrame([], self._verdict_schema(df)),
-                violations=spark.createDataFrame([], self._violation_schema(df)),
+                verdicts=local_frame(spark, [], self._verdict_schema(df)),
+                violations=local_frame(spark, [], self._violation_schema(df)),
                 table_violations=None,
                 skipped_partitions=skipped,
             )
@@ -412,27 +400,29 @@ class ValidationEngine:
         self, spark: SparkSession, verdicts: DataFrame, manifest: Manifest | None
     ) -> DataFrame:
         """Append per-partition lineage records; returns the verdicts
-        re-wrapped from the collected rows so they aren't recomputed."""
+        re-wrapped from the collected rows so they aren't recomputed.
+
+        The key is collected as a Spark column: ``_apply_resume`` matches
+        manifest keys against the same ``partition_key_expr``, so both
+        sides share one string form (``true``, ``1.0E20``, ``…00.5``)."""
         if manifest is None or not self.partition_cols:
             return verdicts
-        vrows = verdicts.collect()
-        keyed = []
-        for r in vrows:
-            key = "|".join(
-                str(r[c]) if r[c] is not None else "∅" for c in self.partition_cols
-            )
-            keyed.append(
-                {
-                    "partition_key": key,
-                    "lineage_hash": lineage_hash(self.spec, key),
-                    "status": "validated",
-                    "row_count": r["row_count"],
-                    "failed_rows": r["failed_rows"],
-                    "passed": r["passed"],
-                }
-            )
+        rows = verdicts.select(
+            "*", partition_key_expr(self.partition_cols).alias("_partition_key")
+        ).collect()
+        keyed = [
+            {
+                "partition_key": r["_partition_key"],
+                "lineage_hash": lineage_hash(self.spec, r["_partition_key"]),
+                "status": "validated",
+                "row_count": r["row_count"],
+                "failed_rows": r["failed_rows"],
+                "passed": r["passed"],
+            }
+            for r in rows
+        ]
         manifest.append(spark, keyed)
-        return spark.createDataFrame(vrows, verdicts.schema)
+        return local_frame(spark, [r[:-1] for r in rows], verdicts.schema)
 
     # ------------------------------------------------------------------
     def run_single_pass(

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_frame
+
 #: query parameter KEYS that never affect content identity (exact
 #: match, except the utm_ family which matches by prefix — a bare
 #: prefix match would wrongly drop e.g. refresh=1 under "fbclid").
@@ -206,8 +208,7 @@ def flag_blocked_hosts(
             blocked = [r[0] for r in blocked_df.collect()]
         return df.withColumn(out_col, blocked_domain_match(F.col(url_col), blocked))
     if n_blocked is not None:
-        spark = df.sparkSession
-        blocked_df = spark.createDataFrame([(d,) for d in blocked], "_dom string")
+        blocked_df = local_frame(df.sparkSession, [(d,) for d in blocked], "_dom string")
     # no distinct on the probe side: urls are the (near-unique) corpus
     # key, so deduplicating them first would be a corpus-wide shuffle
     # for nothing — the post-join groupBy collapses any repeats, and it

@@ -10,9 +10,12 @@ from __future__ import annotations
 
 import json
 import os
+from collections.abc import Sequence
+from datetime import timezone
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, TimestampType
 
 TABLE_FORMAT = os.environ.get("SNOWY_TABLE_FORMAT", "parquet")
 
@@ -40,6 +43,35 @@ def write_table(
         writer.format("iceberg").save(location)
     else:
         writer.parquet(location)
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence], schema: str | StructType
+) -> DataFrame:
+    """DataFrame from a handful of driver-side rows, built on the JVM.
+
+    ``spark.createDataFrame(<list>)`` parallelizes pickled rows and maps
+    them through a Python worker: a Spark job and a worker start for a
+    few bookkeeping rows.  An Arrow table goes to the JVM through
+    ``PythonSQLUtils.toDataFrame`` as one partition, with no Python
+    worker.  ``rows`` are tuples (or ``Row``s) in ``schema``'s field
+    order; ``schema`` is a DDL string or a ``StructType``, kept as given,
+    nullability included.  Naive ``timestamp`` values are local time, as
+    ``collect()`` returns them."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    columns = []
+    for i, (f, typ) in enumerate(zip(struct.fields, arrow.types)):
+        values = [r[i] for r in rows]
+        if not f.nullable and any(v is None for v in values):
+            raise ValueError(f"null in non-nullable column {f.name!r}")
+        if isinstance(f.dataType, TimestampType):
+            values = [v if v is None else v.astimezone(timezone.utc) for v in values]
+        columns.append(pa.array(values, type=typ))
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow), struct)
 
 
 def load_spec(path: str) -> dict[str, Any]:

@@ -33,6 +33,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_frame
+
 MANIFEST_SCHEMA = (
     "partition_key string, lineage_hash string, status string, "
     "row_count long, failed_rows long, passed boolean, finished_at timestamp"
@@ -63,7 +65,7 @@ class Manifest:
 
     def read(self, spark: SparkSession) -> DataFrame:
         if not os.path.exists(self.path):
-            return spark.createDataFrame([], MANIFEST_SCHEMA)
+            return local_frame(spark, [], MANIFEST_SCHEMA)
         return spark.read.parquet(self.path)
 
     def validated_keys(self, spark: SparkSession, spec: dict) -> set[str]:
@@ -83,7 +85,7 @@ class Manifest:
     def append(self, spark: SparkSession, rows: list[dict]) -> None:
         if not rows:
             return
-        now = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
+        now = datetime.datetime.now(datetime.timezone.utc)
         data = [
             (
                 r["partition_key"],
@@ -96,6 +98,6 @@ class Manifest:
             )
             for r in rows
         ]
-        spark.createDataFrame(data, MANIFEST_SCHEMA).coalesce(1).write.mode(
+        local_frame(spark, data, MANIFEST_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(self.path)
