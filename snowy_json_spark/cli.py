@@ -11,8 +11,11 @@ Usage:
         --id-cols url                      \
         --partition-cols lang,url_bucket
 
-On a cluster the session comes from spark-submit's conf (master, executor
-counts); locally it falls back to the tuned local builder.  The job is
+The job scans the input once (``ValidationEngine.run_single_pass``): a
+narrow flagged table is written under ``--out/flagged`` and every
+verdict, violation and table check reads it back.  On a cluster the
+session comes from spark-submit's conf (master, executor counts);
+locally it falls back to the tuned local builder.  The job is
 idempotent: re-submission consults the manifest and validates only
 pending partitions.
 """
@@ -54,15 +57,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--id-cols", default="url")
     ap.add_argument("--partition-cols", default="")
     ap.add_argument("--format", default=None, help="table format (parquet|iceberg)")
-    ap.add_argument(
-        "--mode",
-        default="single-pass",
-        choices=["single-pass", "lazy"],
-        help="single-pass (default): one scan of the wide source into a "
-        "narrow flagged table, all downstream checks read the flagged "
-        "table; lazy: derive every output from the source DataFrame "
-        "(re-scans per consumer — small inputs only)",
-    )
     args = ap.parse_args(argv)
 
     spec = load_spec(args.spec)
@@ -98,10 +92,7 @@ def main(argv: list[str] | None = None) -> int:
         partition_cols=[c for c in args.partition_cols.split(",") if c],
     )
     manifest = Manifest(args.manifest) if args.manifest else None
-    if args.mode == "single-pass":
-        res = eng.run_single_pass(df, args.out, dims=dims, manifest=manifest)
-    else:
-        res = eng.run(df, dims=dims, manifest=manifest)
+    res = eng.run_single_pass(df, args.out, dims=dims, manifest=manifest)
     eng.write_results(res, args.out)
 
     verdicts = res.verdicts.collect()

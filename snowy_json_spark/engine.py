@@ -3,12 +3,15 @@ metrics, with resumable per-partition execution.
 
 Lifecycle (SURVEY.md §3.1 Spark equivalent):
 
-  spec (dict/JSON) ──compile──▶ row Column plan  +  table-check plans
+  spec (dict/JSON) ──compile──▶ row Column plan  +  table-check inputs
        │                              │
-       └──────── run(df) ────────────▶ one select for all row checks,
-                                       agg/join jobs for table checks
-                                       → verdicts, violations, metrics
-                                       → checkpoint manifest append
+       └── run(df) / run_single_pass(df, out_dir) ──▶ one flagged
+           projection: partition + id cols, check inputs, ``passed``,
+           ``violations`` (written to out_dir/flagged and read back
+           only by run_single_pass)
+             → verdicts (one groupBy), violations (one explode),
+               table checks over the projection → metrics
+             → checkpoint manifest append
 
 Table-scope checks live under the spec's ``x-table-checks`` key (an
 engine extension — Snow has no table scope):
@@ -30,7 +33,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.drift import (
@@ -50,15 +53,12 @@ from .operators.referential import referential_violations
 from .operators.stats import ColumnStatsSpec, column_stats, stats_violations
 from .operators.uniqueness import uniqueness_violations
 from .plans.compiler import Compiled, Options, SpecError, compile_spec
-from .plans.report import (
-    VIOLATION_COLUMNS,
-    checks_array,
-    partition_verdicts,
-    violations,
-    with_verdict,
-)
+from .plans.report import VIOLATION_COLUMNS, checks_array
 from .sources.tables import local_frame
 from .streaming.manifest import Manifest, lineage_hash, partition_key_expr
+
+#: table-check kinds whose input may be a derived ``expr`` column
+DRIFT_KINDS = ("drift", "quantile_drift", "tdigest_drift")
 
 
 def _schema_violations(schema, chk: dict, cid: str) -> list[tuple]:
@@ -154,13 +154,67 @@ class ValidationEngine:
         return with_abs_locations(applications(df, plan, self.id_cols), plan)
 
     # ------------------------------------------------------------------
+    def _check_inputs(self, df: DataFrame) -> dict[str, Column]:
+        """Every table check's input column under the name the check
+        reads: source columns as they are, each drift ``expr``
+        materialized under the check's ``column``.  An expr output may
+        not shadow a partition, id or source input column, nor another
+        expr of the same name."""
+        keys = self.partition_cols + self.id_cols
+        plain: dict[str, Column] = {}
+        exprs: dict[tuple[str, str], None] = {}
+        for chk in self.table_checks:
+            kind = chk.get("kind")
+            if kind in DRIFT_KINDS:
+                expr = chk.get("expr")
+                if expr:
+                    exprs[(chk["column"], expr)] = None
+                names = ([] if expr else [chk["column"]]) + [chk.get("group_by")]
+                plain.update({n: F.col(n) for n in names if n in df.columns})
+            elif kind in ("referential", "column_stats"):
+                plain[chk["column"]] = F.col(chk["column"])
+            elif kind == "unique":
+                plain.update({k: F.col(k) for k in chk["keys"]})
+        derived = [name for name, _ in exprs]
+        clash = [n for n in derived if n in keys or n in plain or derived.count(n) > 1]
+        if clash:
+            raise SpecError(
+                f"drift expr output {clash[0]!r} collides with a projected "
+                "column; rename the drift check's column"
+            )
+        return {**plain, **{n: F.expr(e).alias(n) for n, e in exprs}}
+
+    def _flagged_projection(self, df: DataFrame) -> list[Column]:
+        """Partition and id columns, every table-check input, ``passed``
+        and the ``violations`` array: all any output is derived from.
+        Pure driver-side Column construction (~0.2 s of py4j round trips
+        for the flagship spec, r06) that depends only on (session,
+        schema), so memoized like :meth:`compile`."""
+        key = ("flagged", df.sparkSession, df.schema.json())
+        projection = self._compile_cache.get(key)
+        if projection is None:
+            plan = self.compile(df)
+            keys = list(dict.fromkeys(self.partition_cols + self.id_cols))
+            projection = [F.col(c) for c in keys]
+            projection += [
+                col for name, col in self._check_inputs(df).items() if name not in keys
+            ]
+            projection += [
+                F.coalesce(plan.valid, F.lit(False)).alias("passed"),
+                checks_array(plan).alias("violations"),
+            ]
+            self._compile_cache[key] = projection
+        return projection
+
     def _run_table_checks(
         self,
         df: DataFrame,
+        schema,
         dims: dict[str, DataFrame],
         snapshot: dict | None,
-        table_checks: list | None = None,
     ) -> tuple[DataFrame | None, list[dict], dict]:
+        """Table checks over the flagged projection ``df``; schema
+        contracts against the source ``schema``."""
         spark = df.sparkSession
         tv_parts: list[DataFrame] = []
         drift_out: list[dict] = []
@@ -170,13 +224,13 @@ class ValidationEngine:
         no_ids = (None,) * len(self.id_cols)
         viol_ddl = ", ".join(f"{c} string" for c in self.id_cols + VIOLATION_COLUMNS)
 
-        for chk in table_checks if table_checks is not None else self.table_checks:
+        for chk in self.table_checks:
             kind = chk.get("kind")
             cid = f"#/x-table-checks/{chk.get('id', kind)}"
             if kind == "schema":
                 # declarative schema contract: metadata-only (zero data
                 # scan) — missing / mistyped / unexpected columns
-                svs = _schema_violations(df.schema, chk, cid)
+                svs = _schema_violations(schema, chk, cid)
                 if svs:
                     tv_parts.append(
                         local_frame(spark, [no_ids + s for s in svs], viol_ddl)
@@ -240,8 +294,6 @@ class ValidationEngine:
                         )
                     )
             elif kind == "drift":
-                expr = chk.get("expr")
-                src = df.withColumn(chk["column"], F.expr(expr)) if expr else df
                 hspec = HistogramSpec(
                     chk["column"], chk["lo"], chk["hi"], chk.get("buckets", 20)
                 )
@@ -266,15 +318,13 @@ class ValidationEngine:
                          "check_id": chk.get("id")}
                     )
                 else:
-                    cur = collect_histogram(src, hspec, chk.get("group_by"))
+                    cur = collect_histogram(df, hspec, chk.get("group_by"))
                     for v in drift_verdicts(cur, snap, th):
                         v["check_id"] = chk.get("id")
                         drift_out.append(v)
             elif kind == "quantile_drift":
-                expr = chk.get("expr")
-                src = df.withColumn(chk["column"], F.expr(expr)) if expr else df
                 probs = chk.get("probs", [0.25, 0.5, 0.75, 0.9, 0.99])
-                cur_q = collect_quantiles(src, chk["column"], probs)
+                cur_q = collect_quantiles(df, chk["column"], probs)
                 snap_q = (snapshot or {}).get(chk.get("id"))
                 if snap_q is None:
                     v = {"group": None, "psi": None, "ks": None,
@@ -290,8 +340,6 @@ class ValidationEngine:
                 # north-star drift variant: the current quantile grid vs
                 # the reference snapshot's grid, KS on the grid CDFs
                 # (tail-resolving where fixed-bucket histograms are not)
-                expr = chk.get("expr")
-                src = df.withColumn(chk["column"], F.expr(expr)) if expr else df
                 snap = (snapshot or {}).get(chk.get("id"))
                 ks_fail = chk.get("ks_fail", 0.2)
                 if snap is None:
@@ -306,7 +354,7 @@ class ValidationEngine:
                     drift_out.append(v)
                     continue
                 snap = checked_grid(snap, chk.get("id"))
-                cur = grid_snapshot(quantiles(src, chk["column"], GRID_PROBS).first())
+                cur = grid_snapshot(quantiles(df, chk["column"], GRID_PROBS).first())
                 if cur["n"] == 0 or snap["n"] == 0:
                     v = {"group": None, "psi": None, "ks": None,
                          "status": "missing_current" if cur["n"] == 0 else "missing_snapshot"}
@@ -340,28 +388,70 @@ class ValidationEngine:
     ) -> ValidationResult:
         """Validate ``df``; with a manifest, skip validated partitions.
 
+        Lazy: every output is a plan over the flagged projection of
+        ``df``, so each consumer re-scans the source.  Results equal
+        :meth:`run_single_pass`'s, which scans once.
+
         Resume is **partition pruning**: pending partitions become an
         ``isin`` filter on the partition-key expression, pushed to the
         scan."""
+        return self._validate(df, None, dims, snapshot, manifest)
+
+    def run_single_pass(
+        self,
+        df: DataFrame,
+        out_dir: str,
+        dims: dict[str, DataFrame] | None = None,
+        snapshot: dict | None = None,
+        manifest: Manifest | None = None,
+    ) -> ValidationResult:
+        """One scan of the source table, period; results equal
+        :meth:`run`'s.
+
+        The compact **flagged table** (partition cols + id cols + table
+        check inputs + ``passed`` + the violations array) is written to
+        ``out_dir/flagged`` in a single pass, and verdicts, violation
+        rows and every table check read it back: downstream jobs read
+        the small projection, never the wide source (html stays
+        untouched on disk)."""
+        return self._validate(df, out_dir, dims, snapshot, manifest)
+
+    def _validate(
+        self,
+        df: DataFrame,
+        out_dir: str | None,
+        dims: dict[str, DataFrame] | None,
+        snapshot: dict | None,
+        manifest: Manifest | None,
+    ) -> ValidationResult:
         spark = df.sparkSession
         df, skipped, empty = self._apply_resume(df, manifest)
         if empty is not None:
             return empty
+        flagged = df.select(*self._flagged_projection(df))
+        if out_dir is not None:
+            from .sources.tables import write_table
 
-        plan = self.compile(df)
-        if self.partition_cols:
-            verdicts = partition_verdicts(df, plan, self.partition_cols)
-        else:
-            verdicts = partition_verdicts(
-                df.withColumn("_all", F.lit("all")), plan, ["_all"]
-            )
-        viols = violations(df, plan, self.id_cols)
-        table_viol, drift_out, stats_out = self._run_table_checks(
-            df, dims or {}, snapshot
+            write_table(flagged, f"{out_dir}/flagged")
+            flagged = spark.read.parquet(f"{out_dir}/flagged")
+
+        # no partition columns → a global aggregate: one verdict row
+        verdicts = flagged.groupBy(*self.partition_cols).agg(
+            F.count(F.lit(1)).alias("row_count"),
+            F.sum((~F.col("passed")).cast("long")).alias("failed_rows"),
+            F.min("passed").alias("passed"),
         )
-
+        viols = (
+            flagged.filter(F.size("violations") > 0)
+            .select(*self.id_cols, F.explode("violations").alias("_v"))
+            .select(
+                *self.id_cols, *[F.col(f"_v.{c}").alias(c) for c in VIOLATION_COLUMNS]
+            )
+        )
+        table_viol, drift_out, stats_out = self._run_table_checks(
+            flagged, df.schema, dims or {}, snapshot
+        )
         verdicts = self._record_manifest(spark, verdicts, manifest)
-
         return ValidationResult(
             verdicts=verdicts,
             violations=viols,
@@ -425,148 +515,16 @@ class ValidationEngine:
         return local_frame(spark, [r[:-1] for r in rows], verdicts.schema)
 
     # ------------------------------------------------------------------
-    def run_single_pass(
-        self,
-        df: DataFrame,
-        out_dir: str,
-        dims: dict[str, DataFrame] | None = None,
-        snapshot: dict | None = None,
-        manifest: Manifest | None = None,
-    ) -> ValidationResult:
-        """One scan of the source table, period.
-
-        ``run()`` is lazy-DataFrame-shaped and re-scans the source per
-        consumer — fine locally, wasteful at 100 TB.  This variant
-        materializes a compact **flagged table** (partition cols + id
-        cols + drift inputs + ``passed`` + the violations array) in a
-        single pass, then derives verdicts, violation rows, uniqueness,
-        referential and drift checks from that table: every downstream
-        job reads the small projection, never the wide source (html
-        stays untouched on disk)."""
-        from .sources.tables import write_table
-
-        spark = df.sparkSession
-        df, skipped, empty = self._apply_resume(df, manifest)
-        if empty is not None:
-            return empty
-        plan = self.compile(df)
-
-        # the flagged projection is pure driver-side Column construction
-        # (another ~0.2 s of py4j round trips for the flagship spec, r06)
-        # and depends only on (session, schema) — memoized like compile()
-        proj_key = ("single_pass_proj", df.sparkSession, df.schema.json())
-        cached_proj = self._compile_cache.get(proj_key)
-        if cached_proj is None:
-            valid = F.coalesce(plan.valid, F.lit(False))
-
-            # every table check re-runs against the narrow flagged table, so
-            # each check's input column must be in the projection (deduped by
-            # name — a column may serve several roles)
-            extra: dict = {}
-            drift_exprs: dict = {}
-            for chk in self.table_checks:
-                kind = chk.get("kind")
-                if kind in ("drift", "quantile_drift", "tdigest_drift"):
-                    expr = chk.get("expr")
-                    if expr:
-                        drift_exprs[chk["column"]] = F.expr(expr).alias(chk["column"])
-                    elif chk["column"] in df.columns:
-                        extra[chk["column"]] = F.col(chk["column"])
-                elif kind == "referential":
-                    extra[chk["column"]] = F.col(chk["column"])
-                elif kind == "unique":
-                    for k in chk["keys"]:
-                        extra[k] = F.col(k)
-                elif kind == "column_stats":
-                    extra[chk["column"]] = F.col(chk["column"])
-
-            names = list(dict.fromkeys(self.partition_cols + self.id_cols))
-            projection = [F.col(c) for c in names]
-            for name, col in extra.items():
-                if name not in names:
-                    names.append(name)
-                    projection.append(col)
-            for name, col in drift_exprs.items():
-                if name in names:
-                    raise SpecError(
-                        f"drift expr output {name!r} collides with a projected "
-                        "column; rename the drift check's column"
-                    )
-                names.append(name)
-                projection.append(col)
-            projection += [
-                valid.alias("passed"),
-                checks_array(plan).alias("violations"),
-            ]
-            cached_proj = projection
-            self._compile_cache[proj_key] = cached_proj
-        projection = cached_proj
-
-        flagged_path = f"{out_dir}/flagged"
-        write_table(df.select(*projection), flagged_path)
-        back = spark.read.parquet(flagged_path)
-
-        if self.partition_cols:
-            verdicts = back.groupBy(*self.partition_cols).agg(
-                F.count(F.lit(1)).alias("row_count"),
-                F.sum((~F.col("passed")).cast("long")).alias("failed_rows"),
-                F.min("passed").alias("passed"),
-            )
-        else:
-            verdicts = back.agg(
-                F.count(F.lit(1)).alias("row_count"),
-                F.sum((~F.col("passed")).cast("long")).alias("failed_rows"),
-                F.min("passed").alias("passed"),
-            )
-        viols = (
-            back.filter(F.size("violations") > 0)
-            .select(*self.id_cols, F.explode("violations").alias("_v"))
-            .select(
-                *self.id_cols, *[F.col(f"_v.{c}").alias(c) for c in VIOLATION_COLUMNS]
-            )
-        )
-        # drift inputs were materialized under chk["column"] in the
-        # flagged table — drop the exprs so they aren't re-applied
-        # schema contracts check the ORIGINAL (wide) schema, not the
-        # narrow flagged projection; everything else re-runs against it
-        checks_for_back = [
-            {k: v for k, v in chk.items() if k != "expr"}
-            if chk.get("kind") in ("drift", "quantile_drift", "tdigest_drift")
-            else chk
-            for chk in self.table_checks
-            if chk.get("kind") != "schema"
-        ]
-        schema_checks = [c for c in self.table_checks if c.get("kind") == "schema"]
-        table_viol, drift_out, stats_out = self._run_table_checks(
-            back, dims or {}, snapshot, table_checks=checks_for_back
-        )
-        if schema_checks:
-            sv, _, _ = self._run_table_checks(
-                df, dims or {}, snapshot, table_checks=schema_checks
-            )
-            if sv is not None:
-                table_viol = sv if table_viol is None else table_viol.unionByName(sv)
-        verdicts = self._record_manifest(spark, verdicts, manifest)
-        return ValidationResult(
-            verdicts=verdicts,
-            violations=viols,
-            table_violations=table_viol,
-            drift=drift_out,
-            stats=stats_out,
-            skipped_partitions=skipped,
-        )
-
-    # ------------------------------------------------------------------
     def collect_snapshot(self, df: DataFrame) -> dict:
         """Materialize the drift baselines from a reference run: per
         drift check the current histogram (or quantile sketch values) —
         the 'pages_snapshot_stats' artifact of FIXTURES.md §1.  Tiny
-        (KBs), JSON-serializable, broadcastable."""
+        (KBs), JSON-serializable, broadcastable.  Drift inputs come
+        from the same projection the validation runs read."""
         snap: dict = {}
+        src = df.select(*self._check_inputs(df).values())
         for chk in self.table_checks:
             kind = chk.get("kind")
-            expr = chk.get("expr")
-            src = df.withColumn(chk["column"], F.expr(expr)) if expr else df
             if kind == "drift":
                 hspec = HistogramSpec(
                     chk["column"], chk["lo"], chk["hi"], chk.get("buckets", 20)
@@ -633,12 +591,8 @@ class ValidationEngine:
 
     # ------------------------------------------------------------------
     def _verdict_schema(self, df: DataFrame):
-        cols = self.partition_cols or ["_all"]
         base = [
-            f"`{c}` {df.schema[c].dataType.simpleString()}"
-            if c in df.columns
-            else f"`{c}` string"
-            for c in cols
+            f"`{c}` {df.schema[c].dataType.simpleString()}" for c in self.partition_cols
         ]
         return ", ".join(base + ["row_count long", "failed_rows long", "passed boolean"])
 

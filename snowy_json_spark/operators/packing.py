@@ -27,8 +27,6 @@ against the tokenized text, co-partitioned on the same shard key.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window

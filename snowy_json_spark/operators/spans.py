@@ -29,7 +29,7 @@ from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: Default taggers — deliberately aligned with text.scrub_pii's

@@ -78,7 +78,7 @@ HASHED_BROADCAST_LIMIT = 10_000_000
 def duplicate_keys_hashed(
     df: DataFrame,
     keys: list[str],
-    broadcast_limit: int | None = HASHED_BROADCAST_LIMIT,
+    broadcast_limit: int = HASHED_BROADCAST_LIMIT,
 ) -> DataFrame:
     """Hash-first duplicate detection for wide/high-cardinality keys
     (e.g. urls): identical output to :func:`duplicate_keys`, a fraction
@@ -98,11 +98,9 @@ def duplicate_keys_hashed(
     broadcasts only while the count stays under ``broadcast_limit``;
     above it (web crawls run 20-50% dups) it degrades gracefully to a
     shuffle hash join instead of dying on the broadcast ceiling.
-    ``broadcast_limit=None`` skips the count and leaves the join
-    unhinted for AQE to size — measured SLOWER here (the planned SMJ
-    materializes the probe side's full-key shuffle before AQE can
-    convert, 201 s vs 110 s at 32M/local[4]), kept as the no-extra-job
-    option."""
+    Leaving the join unhinted for AQE to size was measured slower (the
+    planned SMJ materializes the probe side's full-key shuffle before
+    AQE can convert, 201 s vs 110 s at 32M/local[4])."""
     h = F.xxhash64(*[F.col(k) for k in keys]).alias("_h")
     cand = (
         df.select(h)
@@ -111,14 +109,9 @@ def duplicate_keys_hashed(
         .filter(F.col("_c") > 1)
         .select("_h")
     )
-    if broadcast_limit is None:
-        cand_side = cand  # AQE picks broadcast vs shuffle from real size
-    else:
-        cand = cand.persist()
-        n_cand = cand.count()  # materializes the cache; one agg job
-        cand_side = (
-            F.broadcast(cand) if n_cand <= broadcast_limit else cand.hint("shuffle_hash")
-        )
+    cand = cand.persist()
+    n_cand = cand.count()  # materializes the cache; one agg job
+    cand_side = F.broadcast(cand) if n_cand <= broadcast_limit else cand.hint("shuffle_hash")
     cand_rows = df.select(*keys, h).join(cand_side, "_h")
     return (
         cand_rows.groupBy(*keys)
@@ -127,17 +120,11 @@ def duplicate_keys_hashed(
     )
 
 
-def uniqueness_violations(
-    df: DataFrame, keys: list[str], constraint_id: str, strategy: str = "hashed"
-) -> DataFrame:
+def uniqueness_violations(df: DataFrame, keys: list[str], constraint_id: str) -> DataFrame:
     """Violation rows in the engine's standard shape: one row per
-    duplicated key value.  ``hashed`` (default) minimizes shuffle bytes
-    on string keys; ``plain`` is the one-shuffle original."""
-    dups = (
-        duplicate_keys_hashed(df, keys)
-        if strategy == "hashed"
-        else duplicate_keys(df, keys)
-    )
+    duplicated key value, found by :func:`duplicate_keys_hashed` (fewest
+    shuffle bytes on string keys)."""
+    dups = duplicate_keys_hashed(df, keys)
     key_repr = F.concat_ws("|", *[F.col(k).cast("string") for k in keys])
     return dups.select(
         *keys,

@@ -77,3 +77,45 @@ def test_walk_sees_function_local_imports():
     assert any(line not in top for line, _, _ in entry)
     assert _unresolved("snowy_json_spark.operators.drift", "no_such_name")
     assert _unresolved("snowy_json_spark.operators.no_such_module", None)
+
+
+def _bound_names(tree: ast.AST) -> list[tuple[int, str]]:
+    """(line, local name) bound by each import in ``tree``."""
+    out = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            out += [(node.lineno, a.asname or a.name.partition(".")[0]) for a in node.names]
+        elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+            out += [(node.lineno, a.asname or a.name) for a in node.names if a.name != "*"]
+    return out
+
+
+def _unused_imports(source: str) -> list[tuple[int, str]]:
+    """Imported names never referenced as a ``Name`` (an attribute
+    chain's root is one) anywhere in the module."""
+    tree = ast.parse(source)
+    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    return [(line, name) for line, name in _bound_names(tree) if name not in used]
+
+
+MODULES = [
+    p
+    for p in SOURCES
+    if p.name != "__init__.py" and p.relative_to(ROOT).parts[0] == "snowy_json_spark"
+]
+
+
+@pytest.mark.parametrize("path", MODULES, ids=lambda p: str(p.relative_to(ROOT)))
+def test_every_import_is_used(path):
+    """A name imported into a module (``__init__`` re-exports aside) is
+    referenced there; a stale import outlives the code that needed it."""
+    unused = [f"{path.name}:{line}: {name}" for line, name in _unused_imports(path.read_text())]
+    assert not unused, "\n".join(unused)
+
+
+def test_unused_import_check_sees_names():
+    src = (
+        "import os.path\nimport json as j\nfrom typing import Iterator\n"
+        "from x import a, b\n\ndef f(it: Iterator):\n    return os.sep, a\n"
+    )
+    assert _unused_imports(src) == [(2, "j"), (4, "b")]
