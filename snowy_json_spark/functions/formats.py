@@ -152,7 +152,6 @@ def _is_ipv6(v: str) -> bool:
 # ---- RFC 3986 URI validator (Python-side; mirrors net/URI.java semantics,
 # fresh implementation from the RFC grammar) --------------------------------
 
-_SCHEME_RE = re.compile(r"\A[A-Za-z][A-Za-z0-9+.-]*\Z")
 _PCT = r"%[0-9A-Fa-f]{2}"
 _UNRESERVED = r"[A-Za-z0-9\-._~]"
 _SUB_DELIMS = r"[!$&'()*+,;=]"
@@ -161,7 +160,6 @@ _SEGMENT_RE = re.compile(rf"\A(?:{_PCHAR})*\Z")
 _QUERY_RE = re.compile(rf"\A(?:{_PCHAR}|[/?])*\Z")
 _USERINFO_RE = re.compile(rf"\A(?:{_UNRESERVED}|{_PCT}|{_SUB_DELIMS}|:)*\Z")
 _REG_NAME_RE = re.compile(rf"\A(?:{_UNRESERVED}|{_PCT}|{_SUB_DELIMS})*\Z")
-_IPV4_RE = re.compile(_anchored(_IPV4).replace(r"\A", "\\A").replace(r"\z", "\\Z"))
 
 
 def _valid_host(host: str) -> bool:

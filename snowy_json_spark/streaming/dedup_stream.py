@@ -10,6 +10,9 @@ not the corpus.
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -98,15 +101,45 @@ def minhash_dedup_batch(
     manifest-resume design of the batch engine.  The index read uses
     partition discovery over the ``batch_id=`` layout; on a real
     deployment point ``index_dir`` at an Iceberg table and replace the
-    per-batch overwrite with a transactional append."""
+    per-batch overwrite with a transactional append.
+
+    Index identity: the first batch stores ``index_dir/_identity.json``
+    (hash family and signature parameters) before any index write; a
+    batch whose parameters differ, or an index with signatures but no
+    identity file (older code, maybe another hash family), raises
+    ``ValueError`` instead of silently finding no duplicates."""
     from pyspark.errors import AnalysisException
 
-    from ..operators.dedup import minhash_index, probe_index
+    from ..operators.dedup import MINHASH_FAMILY, minhash_index, probe_index
 
     sigs_dir = f"{index_dir}/sigs"
     bands_dir = f"{index_dir}/bands"
+    identity_path = f"{index_dir}/_identity.json"
+    identity = dict(family=MINHASH_FAMILY, n_hashes=n_hashes, n_bands=n_bands,
+                    shingle_k=shingle_k, mode=mode, seed=seed)
+
+    def check_identity() -> None:
+        if not os.path.exists(identity_path):
+            if os.path.exists(sigs_dir):
+                raise ValueError(
+                    f"minhash index {index_dir} has signatures but no "
+                    "_identity.json (built by older code, possibly under "
+                    "another hash family); rebuild it"
+                )
+            os.makedirs(index_dir, exist_ok=True)
+            with open(identity_path, "w") as f:
+                json.dump(identity, f, sort_keys=True)
+            return
+        with open(identity_path) as f:
+            stored = json.load(f)
+        bad = [f"{k}: index {stored.get(k)!r}, batch {v!r}"
+               for k, v in identity.items() if stored.get(k) != v]
+        if bad:
+            raise ValueError(f"minhash index {index_dir} has another identity "
+                             f"({'; '.join(bad)}); its signatures cannot be probed")
 
     def fn(batch: DataFrame, batch_id: int) -> None:
+        check_identity()
         spark = batch.sparkSession
         # every persist is released in the finally: a continuous
         # stream calls this once per epoch, and leaked cache entries

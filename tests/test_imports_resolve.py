@@ -119,3 +119,75 @@ def test_unused_import_check_sees_names():
         "from x import a, b\n\ndef f(it: Iterator):\n    return os.sep, a\n"
     )
     assert _unused_imports(src) == [(2, "j"), (4, "b")]
+
+
+def _private_defs(tree: ast.Module) -> list[tuple[int, str]]:
+    """(top-level statement index, name) per module-level private
+    function, class or assigned name (dunders aside)."""
+    out = []
+    for i, stmt in enumerate(tree.body):
+        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names = [stmt.name]
+        elif isinstance(stmt, ast.Assign):
+            names = [t.id for t in stmt.targets if isinstance(t, ast.Name)]
+        elif isinstance(stmt, ast.AnnAssign) and isinstance(stmt.target, ast.Name):
+            names = [stmt.target.id]
+        else:
+            names = []
+        out += [(i, n) for n in names if n.startswith("_") and not n.startswith("__")]
+    return out
+
+
+def _references(tree: ast.Module) -> list[tuple[int, str]]:
+    """(top-level statement index, name) per name read, attribute read
+    or name imported anywhere in the module."""
+    out = []
+    for i, stmt in enumerate(tree.body):
+        for n in ast.walk(stmt):
+            if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
+                out.append((i, n.id))
+            elif isinstance(n, ast.Attribute):
+                out.append((i, n.attr))
+            elif isinstance(n, ast.ImportFrom):
+                out += [(i, a.name) for a in n.names]
+    return out
+
+
+def _unused_private_names(sources: dict[str, str]) -> list[str]:
+    """``module:name`` for each module-level private name that nothing in
+    ``sources`` references outside its own definition (recursion and a
+    constant's own right-hand side do not count)."""
+    trees = {mod: ast.parse(src) for mod, src in sources.items()}
+    where: dict[str, set[tuple[str, int]]] = {}
+    for mod, tree in trees.items():
+        for i, name in _references(tree):
+            where.setdefault(name, set()).add((mod, i))
+    return [
+        f"{mod}:{name}"
+        for mod, tree in trees.items()
+        for at, name in _private_defs(tree)
+        if not where.get(name, set()) - {(mod, at)}
+    ]
+
+
+def test_every_private_name_is_used():
+    """A module-level ``_name`` under ``snowy_json_spark/`` is referenced
+    somewhere in the package outside its own definition; a private
+    helper outliving the code that called it is dead code."""
+    sources = {
+        str(p.relative_to(ROOT)): p.read_text()
+        for p in SOURCES
+        if p.relative_to(ROOT).parts[0] == "snowy_json_spark"
+    }
+    unused = _unused_private_names(sources)
+    assert not unused, "\n".join(unused)
+
+
+def test_unused_private_check_sees_names():
+    a = (
+        "import re\n_A = re.compile('x')\n_B = 1\n_C = _C if False else 2\n"
+        "def _rec(n):\n    return _rec(n - 1)\n"
+        "def _used():\n    return _B\nclass _K:\n    pass\n"
+    )
+    b = "from a import _used\nx = _used()\ny = mod._K\n"
+    assert _unused_private_names({"a": a, "b": b}) == ["a:_A", "a:_C", "a:_rec"]

@@ -253,3 +253,37 @@ def test_stream_minhash_dedup_across_batches(spark, tmp_path):
     # the index holds signatures for every survivor and nothing else
     sig_ids = {r["doc_id"] for r in spark.read.parquet(f"{idx}/sigs").collect()}
     assert sig_ids == ids_all
+
+
+@pytest.mark.parametrize("changed", [{"n_hashes": 32}, {"seed": 7}], ids=["n_hashes", "seed"])
+def test_minhash_dedup_batch_rejects_other_index_identity(spark, tmp_path, changed):
+    """A batch whose signature parameters differ from the persisted
+    index's would probe it and silently find nothing: it must raise,
+    naming the mismatched field."""
+    from snowy_json_spark.streaming.dedup_stream import minhash_dedup_batch
+
+    idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
+    schema = "doc_id long, text string"
+    texts = _texts(4)
+    params = dict(threshold=0.8, n_hashes=64, n_bands=16, seed=42)
+    minhash_dedup_batch("doc_id", "text", idx, out, **params)(
+        spark.createDataFrame([(i, texts[i]) for i in range(2)], schema), 0
+    )
+    assert (tmp_path / "idx" / "_identity.json").exists()
+    batch2 = spark.createDataFrame([(10, texts[2]), (11, texts[3])], schema)
+    with pytest.raises(ValueError, match=next(iter(changed))):
+        minhash_dedup_batch("doc_id", "text", idx, out, **{**params, **changed})(batch2, 1)
+
+
+def test_minhash_dedup_batch_rejects_index_without_identity(spark, tmp_path):
+    """An index with signatures but no identity file predates the tag
+    and may hold another hash family's signatures."""
+    from snowy_json_spark.streaming.dedup_stream import minhash_dedup_batch
+
+    idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
+    schema = "doc_id long, text string"
+    batch = spark.createDataFrame([(1, _texts(1)[0])], schema)
+    minhash_dedup_batch("doc_id", "text", idx, out, n_hashes=64, n_bands=16)(batch, 0)
+    (tmp_path / "idx" / "_identity.json").unlink()
+    with pytest.raises(ValueError, match="no _identity.json"):
+        minhash_dedup_batch("doc_id", "text", idx, out, n_hashes=64, n_bands=16)(batch, 1)
