@@ -1495,8 +1495,8 @@ def _q_incremental_dedup_documents(spark, sf_dir):
 
 def _q_host_blocklist_documents(spark, sf_dir):
     """UT1-style host blocklist filtering (urls.flag_blocked_hosts,
-    forced onto the scale path: suffix explode → broadcast join →
-    most-specific match): hosts are synthesized from doc_id arithmetic
+    given a DataFrame blocklist so it takes the scale path: suffix
+    explode → broadcast join → most-specific match): hosts are synthesized from doc_id arithmetic
     — ``h{d%11}.dom{d%7}.top`` — and the blocklist mixes a parent
     domain (``dom3.top``, catches every d%7==3 host as a subdomain
     suffix), an exact host (``h5.dom2.top``, d%11==5 ∧ d%7==2), and a
@@ -1516,9 +1516,11 @@ def _q_host_blocklist_documents(spark, sf_dir):
             d.cast("string"),
         ).alias("url"),
     )
-    flagged = flag_blocked_hosts(
-        docs, "url", ["dom3.top", "h5.dom2.top", "absent.example"], impl="join"
+    # a DataFrame blocklist always takes the broadcast-join path
+    blocked = spark.createDataFrame(
+        [("dom3.top",), ("h5.dom2.top",), ("absent.example",)], "domain string"
     )
+    flagged = flag_blocked_hosts(docs, "url", blocked)
     return (
         flagged.groupBy(
             F.coalesce(F.col("blocked_domain"), F.lit("kept")).alias("verdict")
@@ -1705,10 +1707,12 @@ def _q_domain_cap_documents(spark, sf_dir):
     FineWeb-style per-host contribution limit): hosts are synthesized
     from doc_id arithmetic (``h{d%5}.example.com``), the score is
     ``coalesce(length(text),0) % 50`` so ties are common and the
-    doc_id tiebreaker path is exercised, and the two-stage bucketed
-    window (n_buckets=8) must emit exactly the rows a plain
-    ``row_number() OVER (PARTITION BY host ORDER BY score DESC,
-    doc_id)`` keeps — the oracle runs that window verbatim."""
+    doc_id tiebreaker path is exercised, and the cap (k = 7, under the
+    window group-limit threshold, so the declarative window path) must
+    emit exactly the rows a plain ``row_number() OVER (PARTITION BY
+    host ORDER BY score DESC, doc_id)`` keeps — the oracle runs that
+    window verbatim.  The two-stage path is checked against the same
+    window in tests/test_topk.py."""
     from snowy_json_spark.operators.topk import domain_cap
 
     d = F.col("doc_id")
@@ -1724,10 +1728,7 @@ def _q_domain_cap_documents(spark, sf_dir):
         .cast("double")
         .alias("score"),
     )
-    capped = domain_cap(
-        docs, "url", "score", 7, id_col="doc_id", n_buckets=8,
-        impl="two_stage",
-    )
+    capped = domain_cap(docs, "url", "score", 7, id_col="doc_id", n_buckets=8)
     return capped.select("doc_id", "score").orderBy("doc_id")
 
 

@@ -21,14 +21,16 @@ mapper.  The truly naive plan only exists with that rule disabled
 So this script measures THREE plans on the same skewed input:
 
 - ``window``      — declarative window, group-limit rewrite active
-                    (operators.topk default impl);
-- ``no_limit``    — same window with the rewrite disabled: every
-                    hot-host row lands in ONE window task (what the
-                    plan degrades to above the k-threshold or on
-                    engines without the rule);
-- ``two_stage``   — the explicit bucketed stage-1 local top-k
-                    (operators.topk impl="two_stage"), which bounds
-                    sorts structurally without the rule.
+                    (what operators.topk plans for k at or under the
+                    threshold);
+- ``no_limit``    — the same window built inline with the rewrite
+                    disabled: every hot-host row lands in ONE window
+                    task (what a plain window degrades to above the
+                    k-threshold or on engines without the rule);
+- ``two_stage``   — the explicit bucketed stage-1 local top-k, which
+                    bounds sorts structurally without the rule
+                    (operators.topk plans it for k above the threshold,
+                    so this leg sets the threshold to k - 1).
 
 Use ``--payload-chars`` to attach realistic row widths: the skew pain
 is proportional to the bytes the hot task must sort/spill, and domain
@@ -141,29 +143,31 @@ def main() -> None:
 
     def window():
         # declarative window; InferWindowGroupLimit prunes map-side
-        return consume(
-            top_k_per_key(pages, "host", order, args.k, impl="window")
-        )
+        return consume(top_k_per_key(pages, "host", order, args.k))
 
     def no_limit():
         # the TRULY naive plan: rewrite disabled, every hot-host row
         # sorts in ONE window task
         spark.conf.set(THRESH, "-1")
         try:
+            w = Window.partitionBy("host").orderBy(*order)
             return consume(
-                top_k_per_key(pages, "host", order, args.k, impl="window")
+                pages.withColumn("_r", F.row_number().over(w))
+                .filter(F.col("_r") <= args.k)
+                .drop("_r")
             )
         finally:
-            spark.conf.set(THRESH, "1000")
+            spark.conf.unset(THRESH)
 
     def two_stage():
-        return consume(
-            top_k_per_key(
-                pages, "host", order, args.k,
-                salt_col="doc_id", n_buckets=args.cpus * 2,
-                impl="two_stage",
+        # k above the threshold: top_k_per_key plans the bucketed form
+        spark.conf.set(THRESH, str(args.k - 1))
+        try:
+            return consume(
+                top_k_per_key(pages, "host", order, args.k, n_buckets=args.cpus * 2)
             )
-        )
+        finally:
+            spark.conf.unset(THRESH)
 
     t_win, reps_win = timed(window, args.reps, args.cooldown)
     time.sleep(args.cooldown)

@@ -53,7 +53,12 @@ from .operators.referential import referential_violations
 from .operators.stats import ColumnStatsSpec, column_stats, stats_violations
 from .operators.uniqueness import uniqueness_violations
 from .plans.compiler import Compiled, Options, SpecError, compile_spec
-from .plans.report import VIOLATION_COLUMNS, checks_array
+from .plans.report import (
+    VIOLATION_COLUMNS,
+    checks_array,
+    explode_violations,
+    verdict_aggs,
+)
 from .sources.tables import local_frame
 from .streaming.manifest import Manifest, lineage_hash, partition_key_expr
 
@@ -437,16 +442,10 @@ class ValidationEngine:
 
         # no partition columns → a global aggregate: one verdict row
         verdicts = flagged.groupBy(*self.partition_cols).agg(
-            F.count(F.lit(1)).alias("row_count"),
-            F.sum((~F.col("passed")).cast("long")).alias("failed_rows"),
-            F.min("passed").alias("passed"),
+            *verdict_aggs(F.col("passed"))
         )
-        viols = (
-            flagged.filter(F.size("violations") > 0)
-            .select(*self.id_cols, F.explode("violations").alias("_v"))
-            .select(
-                *self.id_cols, *[F.col(f"_v.{c}").alias(c) for c in VIOLATION_COLUMNS]
-            )
+        viols = explode_violations(
+            flagged.filter(F.size("violations") > 0), F.col("violations"), self.id_cols
         )
         table_viol, drift_out, stats_out = self._run_table_checks(
             flagged, df.schema, dims or {}, snapshot

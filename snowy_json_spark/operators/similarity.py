@@ -176,29 +176,28 @@ def train_ivf_centroids(
 
 def _nearest_cell_expr(vec_col: Column, centroids: np.ndarray) -> Column:
     """argmin_c ||v - c||² = argmax_c (v·c - ||c||²/2) — pure Column
-    expressions over broadcast centroid literals (no UDF, no shuffle)."""
-    best_idx = F.lit(0)
-    best_score = dot(vec_col, _vec_lit(centroids[0].tolist())) - F.lit(
-        float(np.dot(centroids[0], centroids[0]) / 2)
+    expressions over centroid literals (no UDF, no shuffle).  The cell
+    is the first position holding the array's maximum score, the same
+    first-max tie-break as numpy's argmax; each score is built once, so
+    the plan grows linearly in the cell count (a chained
+    ``when(score > best, …)`` nests the running best twice per cell and
+    doubles the plan with every cell)."""
+    scores = F.array(
+        *[
+            dot(vec_col, _vec_lit(c.tolist())) - F.lit(float(np.dot(c, c) / 2))
+            for c in centroids
+        ]
     )
-    for i in range(1, len(centroids)):
-        score = dot(vec_col, _vec_lit(centroids[i].tolist())) - F.lit(
-            float(np.dot(centroids[i], centroids[i]) / 2)
-        )
-        better = score > best_score
-        best_idx = F.when(better, F.lit(i)).otherwise(best_idx)
-        best_score = F.when(better, score).otherwise(best_score)
-    return best_idx
+    return F.array_position(scores, F.array_max(scores)) - F.lit(1)
 
 
 def _nearest_cell_udf(centroids: np.ndarray):
     """Vectorized cell assignment: one (batch × cells) matmul per Arrow
     batch against the closure-captured centroid matrix.
 
-    Plan size is O(1) in n_cells — the chained-`when` Column path
-    (:func:`_nearest_cell_expr`) duplicates the dot product per cell and
-    explodes past a few dozen cells, a round-1 scale finding.  Same
-    argmax tie-breaking (first maximum) as the expression path."""
+    Plan size is O(1) in n_cells, where the Column path
+    (:func:`_nearest_cell_expr`) carries one dot product per cell.
+    Same argmax tie-breaking (first maximum) as the expression path."""
     from pyspark.sql.types import IntegerType
 
     c = centroids.astype(np.float64)
@@ -222,22 +221,18 @@ def _nearest_cell_udf(centroids: np.ndarray):
 IVF_EXPR_MAX_CELLS = 32
 
 
-def with_ivf_cell(
-    df: DataFrame, vec_col: str, centroids: np.ndarray, impl: str = "auto"
-) -> DataFrame:
+def with_ivf_cell(df: DataFrame, vec_col: str, centroids: np.ndarray) -> DataFrame:
     """Assign each row its IVF cell.  On Iceberg this column becomes a
     partition key so probes prune at the scan.
 
-    ``auto``: pure Column expressions up to IVF_EXPR_MAX_CELLS cells
-    (zero Python), numpy argmax pandas UDF beyond (bounded plan size at
-    the 1k-4k cells a 100-TB corpus needs)."""
-    if impl == "auto":
-        impl = "expr" if len(centroids) <= IVF_EXPR_MAX_CELLS else "arrow"
-    if impl == "expr":
+    The centroid count picks the path: pure Column expressions up to
+    :data:`IVF_EXPR_MAX_CELLS` cells (zero Python), a numpy argmax
+    pandas UDF beyond (bounded plan size at the 1k-4k cells a 100-TB
+    corpus needs).  Both give the same cell, and -1 for a null vector."""
+    if len(centroids) <= IVF_EXPR_MAX_CELLS:
         v = F.col(vec_col).cast("array<double>")
-        # null vectors get cell -1 in BOTH impls (the Arrow path's
-        # convention) so the partition key never depends on which impl
-        # `auto` picked
+        # null vectors get cell -1 on BOTH paths (the Arrow path's
+        # convention) so the partition key never depends on the path
         cell = F.when(
             v.isNotNull(), _nearest_cell_expr(v, centroids).cast("int")
         ).otherwise(F.lit(-1).cast("int"))

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_frame
 from .dedup import normalized_text
 
 # Tiny per-language stopword profiles (public common-word lists)
@@ -554,35 +555,32 @@ def contamination_counts(
     benchmark_texts: list[str],
     n: int = 3,
     min_overlap: int = 1,
-    impl: str = "auto",
 ) -> DataFrame:
     """Input columns + (n_overlap, contaminated) per document — the
     DataFrame-level decontamination operator.
 
-    ``auto`` picks the physical strategy from the benchmark size
-    (round-3 perf_weak fix):
+    The benchmark's distinct n-gram count picks the physical plan
+    (round-3 perf_weak fix); both give the same columns:
 
-    - ``literal`` (≤ :data:`CONTAMINATION_LITERAL_MAX` distinct
-      n-grams): the :func:`contamination_flags` array_intersect plan —
-      zero joins, zero shuffle.
-    - ``join``: benchmark n-grams become a broadcast DataFrame; the
-      documents' DISTINCT n-grams explode and inner-join it (broadcast
-      hash join — no shuffle of the big side), count per document, and
-      left-join back on ``id_col``.  Plan size stays O(1) however large
-      the eval suite is; the exploded side is rows × n-grams but is
-      filtered by the join before the (id-keyed, AQE-coalesced)
-      count aggregation."""
+    - up to :data:`CONTAMINATION_LITERAL_MAX` n-grams: the
+      :func:`contamination_flags` array_intersect plan — zero joins,
+      zero shuffle.
+    - more: benchmark n-grams become a broadcast DataFrame built on the
+      JVM (:func:`~..sources.tables.local_frame`); the documents'
+      DISTINCT n-grams explode and inner-join it (broadcast hash join —
+      no shuffle of the big side), count per document, and left-join
+      back on ``id_col``.  Plan size stays O(1) however large the eval
+      suite is; the exploded side is rows × n-grams but is filtered by
+      the join before the (id-keyed, AQE-coalesced) count
+      aggregation."""
     bench = benchmark_ngrams(benchmark_texts, n)
-    if impl == "auto":
-        impl = "literal" if len(bench) <= CONTAMINATION_LITERAL_MAX else "join"
-    if impl == "literal":
+    if len(bench) <= CONTAMINATION_LITERAL_MAX:
         g = contamination_flags(F.col(text_col), benchmark_texts, n, min_overlap)
         return df.withColumns(
             {"n_overlap": g["n_overlap"], "contaminated": g["contaminated"]}
         )
-    spark = df.sparkSession
     bench_df = F.broadcast(
-        spark.createDataFrame([(g,) for g in sorted(bench)], "ngram string")
+        local_frame(df.sparkSession, [(g,) for g in sorted(bench)], "ngram string")
     )
     exploded = df.select(
         F.col(id_col).alias("_cid"),

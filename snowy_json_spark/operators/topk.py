@@ -26,20 +26,34 @@ while two-stage pays a full extra exchange) — the tradeoff is
 row-width dependent, both are safe, and the unmitigated plan is the
 only catastrophic one.
 
-The default ``impl`` is the plain window — optimizer-maintained, no
-tuning knob — and tests pin ``WindowGroupLimit ... Partial`` into the
-physical plan, so if a Spark upgrade or conf change (threshold conf
-above, or ``k`` over its 1000 default) silently drops the rewrite,
-the plan test fails rather than the cluster.  ``impl="two_stage"``
-keeps the manual form — stage-1 window over ``(key,
-pmod(xxhash64(salt), n_buckets))`` keeping each bucket's local top-k
-(correct because the global top-k is a subset of the union of bucket
-top-ks: any row beaten by ≥ k rows in its own bucket is beaten by ≥ k
-rows globally), stage-2 window over ``key`` on the ≤ k·n_buckets
-survivors — for the cases the rule cannot cover (``k`` beyond the
-threshold, percent-rank-style predicates) or wide-row corpora where
-it measures faster.  Ties are broken by the trailing ``order_by``
-tiebreaker so both impls are deterministic and oracle-reproducible.
+The plan picks its path from ``k`` and the session's
+``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000); no
+caller option selects it:
+
+- ``k`` ≤ threshold: the plain declarative window.  The rule rewrites
+  it, and tests pin ``WindowGroupLimit ... Partial`` into the physical
+  plan, so a Spark upgrade that drops the rewrite fails a test rather
+  than the cluster.
+- ``k`` > threshold (or the rule disabled with ``-1``): the rule does
+  not fire, and the plain window would be the unmitigated plan.  A
+  probe on Spark 4.1.2 with the default threshold keeps the Partial
+  limit at k = 5 and k = 1000 and drops it at k = 1001, so k = 1001
+  would silently run the plan measured at 80.1 s above.  These ``k``
+  take the explicit two-stage form: a stage-1 window over ``(key,
+  pmod(xxhash64(<row content>), n_buckets))`` keeps each bucket's
+  local top-k (correct because the global top-k is a subset of the
+  union of bucket top-ks: any row beaten by ≥ k rows in its own bucket
+  is beaten by ≥ k rows globally), and a stage-2 window over ``key``
+  ranks the ≤ k·n_buckets survivors.  The bucket salt is
+  :func:`~.uniqueness.content_salt`, the one
+  :func:`~.uniqueness.duplicate_keys_salted` uses: a pure function of
+  the row, so retried tasks re-derive the same buckets.
+
+(The rule also leaves the limit out when the optimizer knows the input
+is small: a plan over ``range(100)`` shows none at k = 998, where
+every group is whole anyway.)  Ties are broken by the trailing
+``order_by`` tiebreaker, so both paths are deterministic and
+oracle-reproducible.
 """
 
 from __future__ import annotations
@@ -47,50 +61,40 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .uniqueness import content_salt
+
+_GROUP_LIMIT_THRESHOLD = "spark.sql.optimizer.windowGroupLimitThreshold"
+
 
 def top_k_per_key(
     df: DataFrame,
     key_col: str,
     order_by: list[Column],
     k: int,
-    salt_col: str | None = None,
     n_buckets: int = 64,
     rank_col: str | None = None,
-    impl: str = "window",
 ) -> DataFrame:
     """The top ``k`` rows of every ``key_col`` group under
     ``order_by`` (pass explicit asc/desc Columns; a unique tiebreaker
     last makes results deterministic).
 
-    ``impl="window"`` (default): one declarative window — Spark's
-    ``InferWindowGroupLimit`` plans the map-side partial top-k (see
-    module docstring; requires ``k`` ≤
-    ``spark.sql.optimizer.windowGroupLimitThreshold``, default 1000).
-    ``impl="two_stage"``: explicit bucketed stage-1 local top-k;
-    ``salt_col`` is REQUIRED for it (the bucket hash needs a plain
-    column — ``order_by`` entries carry asc/desc sort order, which
-    cannot be hashed) — any column works, but a near-unique one
-    spreads hot keys best.  With ``rank_col`` the final 1..k rank is
-    kept."""
+    One declarative window while ``k`` ≤ the session's
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (Spark plans the
+    map-side partial top-k); above it, a bucketed stage-1 local top-k
+    over ``n_buckets`` content-hash buckets per key first (see module
+    docstring).  With ``rank_col`` the final 1..k rank is kept."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    if impl not in ("window", "two_stage"):
-        raise ValueError(f"impl must be 'window' or 'two_stage', got {impl!r}")
-    if impl == "two_stage" and salt_col is None:
-        raise ValueError("impl='two_stage' requires salt_col")
-    w2 = Window.partitionBy(F.col(key_col)).orderBy(*order_by)
-    if impl == "window":
-        staged = df
-    else:
-        salt = F.col(salt_col)
-        bucket = F.pmod(F.xxhash64(salt), F.lit(n_buckets))
+    staged = df
+    if k > int(df.sparkSession.conf.get(_GROUP_LIMIT_THRESHOLD)):
         w1 = Window.partitionBy(F.col(key_col), F.col("_tkb")).orderBy(*order_by)
         staged = (
-            df.withColumn("_tkb", bucket)
+            df.withColumn("_tkb", content_salt(df, n_buckets))
             .withColumn("_tkr", F.row_number().over(w1))
             .filter(F.col("_tkr") <= k)
             .drop("_tkr", "_tkb")
         )
+    w2 = Window.partitionBy(F.col(key_col)).orderBy(*order_by)
     out = (
         staged.withColumn("_tkr", F.row_number().over(w2))
         .filter(F.col("_tkr") <= k)
@@ -107,7 +111,6 @@ def domain_cap(
     max_per_host: int,
     id_col: str | None = None,
     n_buckets: int = 64,
-    impl: str = "window",
 ) -> DataFrame:
     """Keep at most ``max_per_host`` documents per url host, preferring
     the highest ``score_col`` — the domain-balancing curation stage.
@@ -118,13 +121,5 @@ def domain_cap(
     if id_col is not None:
         order.append(F.col(id_col).asc())
     with_host = df.withColumn("_tkh", url_host(F.col(url_col)))
-    out = top_k_per_key(
-        with_host,
-        "_tkh",
-        order,
-        max_per_host,
-        salt_col=id_col if id_col is not None else score_col,
-        n_buckets=n_buckets,
-        impl=impl,
-    )
+    out = top_k_per_key(with_host, "_tkh", order, max_per_host, n_buckets=n_buckets)
     return out.drop("_tkh")

@@ -20,8 +20,9 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructType, VariantType
 
 
 def duplicate_keys(df: DataFrame, keys: list[str]) -> DataFrame:
@@ -36,6 +37,28 @@ def duplicate_keys(df: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
+def _hashable(t: DataType) -> bool:
+    """Spark refuses ``xxhash64`` over any type holding a map or a
+    variant, however deeply nested."""
+    if isinstance(t, (MapType, VariantType)):
+        return False
+    if isinstance(t, ArrayType):
+        return _hashable(t.elementType)
+    if isinstance(t, StructType):
+        return all(_hashable(f.dataType) for f in t.fields)
+    return True
+
+
+def content_salt(df: DataFrame, n_buckets: int) -> Column:
+    """``pmod(xxhash64(<every hashable column>), n_buckets)``: a bucket
+    that is a pure function of ROW CONTENT, not of partition layout — a
+    lost-executor re-shuffle or AQE repartition re-derives the identical
+    salt, so retried tasks produce identical output.  Map and variant
+    columns are left out of the hash."""
+    cols = [F.col(f.name) for f in df.schema.fields if _hashable(f.dataType)]
+    return F.pmod(F.xxhash64(*cols), F.lit(n_buckets))
+
+
 def duplicate_keys_salted(
     df: DataFrame, keys: list[str], salt_buckets: int = 64
 ) -> DataFrame:
@@ -46,16 +69,10 @@ def duplicate_keys_salted(
     the key is.  Stage 2 sums the partial counts.  Identical output to
     :func:`duplicate_keys`.
 
-    The salt is a pure function of ROW CONTENT (``xxhash64`` over every
-    column), not of partition layout — a lost-executor re-shuffle or
-    AQE repartition re-derives the identical salt, so retried tasks
-    produce identical output.  Rows identical in *every* column share a
-    salt; harmless, since map-side partial aggregation already collapses
-    them to one row per (key, salt) per task."""
-    salt = F.pmod(
-        F.xxhash64(*[F.col(c) for c in df.columns]),
-        F.lit(salt_buckets),
-    ).alias("_salt")
+    The salt is :func:`content_salt`.  Rows identical in every hashed
+    column share a salt; harmless, since map-side partial aggregation
+    already collapses them to one row per (key, salt) per task."""
+    salt = content_salt(df, salt_buckets).alias("_salt")
     partial = (
         df.select(*keys, salt)
         .groupBy(*keys, "_salt")

@@ -174,40 +174,29 @@ def flag_blocked_hosts(
     url_col: str,
     blocked: list[str] | DataFrame,
     out_col: str = "blocked_domain",
-    impl: str = "auto",
 ) -> DataFrame:
     """Input columns + ``out_col`` = the most-specific blocked domain
     the row's host falls under (exact host or subdomain suffix match,
     the UT1 blocklist convention), null when allowed.
 
-    ``blocked`` is a domain list or a one-column ``domain`` DataFrame.
-    ``auto`` picks the physical strategy from the blocklist size:
+    ``blocked`` is a domain list or a one-column ``domain`` DataFrame,
+    and it picks the physical plan; both give the same column:
 
-    - ``literal`` (≤ :data:`BLOCKLIST_LITERAL_MAX`): pure Column
-      expression — zero joins, zero shuffle.
-    - ``join``: per-URL suffixes explode (≤ ``max_labels`` rows per
-      DISTINCT url, projected to the url column only — never the wide
-      row) and broadcast-hash-join the blocklist; the most-specific
-      match (min suffix position) per url left-joins back on the url
-      string, so plan size and broadcast cost stay O(1) in corpus size
-      and O(blocklist) only in the broadcast."""
+    - a list of at most :data:`BLOCKLIST_LITERAL_MAX` distinct domains:
+      pure Column expression — zero joins, zero shuffle.
+    - a longer list, or any DataFrame (never collected at plan time):
+      per-URL suffixes explode (≤ ``max_labels`` rows per url,
+      projected to the url column only — never the wide row) and
+      broadcast-hash-join the blocklist; the most-specific match (min
+      suffix position) per url left-joins back on the url string, so
+      plan size and broadcast cost stay O(1) in corpus size and
+      O(blocklist) only in the broadcast."""
     if isinstance(blocked, DataFrame):
         blocked_df = blocked.select(F.col(blocked.columns[0]).alias("_dom"))
-        n_blocked = None
     else:
         blocked = sorted(set(blocked))
-        n_blocked = len(blocked)
-    if impl == "auto":
-        impl = (
-            "literal"
-            if n_blocked is not None and n_blocked <= BLOCKLIST_LITERAL_MAX
-            else "join"
-        )
-    if impl == "literal":
-        if n_blocked is None:
-            blocked = [r[0] for r in blocked_df.collect()]
-        return df.withColumn(out_col, blocked_domain_match(F.col(url_col), blocked))
-    if n_blocked is not None:
+        if len(blocked) <= BLOCKLIST_LITERAL_MAX:
+            return df.withColumn(out_col, blocked_domain_match(F.col(url_col), blocked))
         blocked_df = local_frame(df.sparkSession, [(d,) for d in blocked], "_dom string")
     # no distinct on the probe side: urls are the (near-unique) corpus
     # key, so deduplicating them first would be a corpus-wide shuffle
@@ -231,12 +220,11 @@ def blocklist_filter(
     df: DataFrame,
     url_col: str,
     blocked: list[str] | DataFrame,
-    impl: str = "auto",
 ) -> DataFrame:
     """Rows whose host does NOT fall under any blocked domain — the
     URL-filtering curation stage (RefinedWeb §3.1 applies it before
     any text heuristic; cheap, catches whole bad sites at once)."""
-    flagged = flag_blocked_hosts(df, url_col, blocked, "_blocked_dom", impl)
+    flagged = flag_blocked_hosts(df, url_col, blocked, "_blocked_dom")
     return flagged.filter(F.col("_blocked_dom").isNull()).drop("_blocked_dom")
 
 

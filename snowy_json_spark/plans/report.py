@@ -61,10 +61,14 @@ def with_verdict(df: DataFrame, plan: Compiled, name: str = "passed") -> DataFra
 def violations(df: DataFrame, plan: Compiled, id_cols: list[str]) -> DataFrame:
     """One row per (row, failed constraint): (ids..., constraint_id,
     instance_path, observed_value)."""
-    arr = checks_array(plan)
-    return (
-        df.select(*id_cols, F.explode(arr).alias("_v"))
-        .select(*id_cols, *[F.col(f"_v.{c}").alias(c) for c in VIOLATION_COLUMNS])
+    return explode_violations(df, checks_array(plan), id_cols)
+
+
+def explode_violations(df: DataFrame, arr: Column, id_cols: list[str]) -> DataFrame:
+    """The one violation explode: a row per element of ``arr``, a
+    :func:`checks_array` Column or a column holding one."""
+    return df.select(*id_cols, F.explode(arr).alias("_v")).select(
+        *id_cols, *[F.col(f"_v.{c}").alias(c) for c in VIOLATION_COLUMNS]
     )
 
 
@@ -175,11 +179,17 @@ def partition_verdicts(
     Map-side partial aggregation makes this a single cheap shuffle of
     one row per (partition, grain)."""
     valid = F.coalesce(plan.valid, F.lit(False))
-    return df.groupBy(*partition_cols).agg(
+    return df.groupBy(*partition_cols).agg(*verdict_aggs(valid))
+
+
+def verdict_aggs(passed: Column) -> list[Column]:
+    """The verdict aggregates over a non-null per-row ``passed``:
+    ``row_count``, ``failed_rows`` and ``passed`` (every row passed)."""
+    return [
         F.count(F.lit(1)).alias("row_count"),
-        F.sum((~valid).cast("long")).alias("failed_rows"),
-        F.min(valid).alias("passed"),
-    )
+        F.sum((~passed).cast("long")).alias("failed_rows"),
+        F.min(passed).alias("passed"),
+    ]
 
 
 def with_abs_locations(v: DataFrame, plan: Compiled) -> DataFrame:

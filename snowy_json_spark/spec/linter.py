@@ -26,19 +26,12 @@ _NUMERIC_KW = {
     "exclusiveMaximum",
     "multipleOf",
 }
-_TYPE_NAMES = {
-    "null",
-    "boolean",
-    "object",
-    "array",
-    "number",
-    "integer",
-    "string",
-    # engine extensions
-    "timestamp",
-    "date",
-    "binary",
-}
+#: JSON type names + engine extensions (``timestamp``, ``date``,
+#: ``binary``); the meta-schema's ``type`` enum reads the same list
+TYPE_NAMES = [
+    "null", "boolean", "object", "array", "number", "integer", "string",
+    "timestamp", "date", "binary",
+]
 
 
 @dataclass
@@ -126,7 +119,7 @@ def _walk(node: Any, path: str, out: list[Diagnostic], draft: str | None = None)
     if "type" in node:
         ts = node["type"] if isinstance(node["type"], list) else [node["type"]]
         for t in ts:
-            if not isinstance(t, str) or t not in _TYPE_NAMES:
+            if not isinstance(t, str) or t not in TYPE_NAMES:
                 _err(out, path, "type", f"unknown type name {t!r}")
 
     # ---- regex / format sanity -------------------------------------------

@@ -28,12 +28,7 @@ from typing import Any
 
 from ..plans.compiler import SpecError, compile_spec
 from ..plans.report import violations
-
-#: JSON type names + engine extensions (linter._TYPE_NAMES)
-TYPE_NAMES = [
-    "null", "boolean", "object", "array", "number", "integer", "string",
-    "timestamp", "date", "binary",
-]
+from .linter import TYPE_NAMES
 
 _NUMERIC_BOUND_KWS = ("minimum", "maximum", "exclusiveMinimum", "exclusiveMaximum")
 _COUNT_KWS = (

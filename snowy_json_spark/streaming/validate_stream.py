@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.compiler import Options, compile_spec
-from ..plans.report import checks_array, with_verdict
+from ..plans.report import verdict_aggs, violations, with_verdict
 
 
 def stream_verdicts(stream_df: DataFrame, spec: dict, options: Options | None = None) -> DataFrame:
@@ -34,11 +34,7 @@ def stream_verdicts(stream_df: DataFrame, spec: dict, options: Options | None = 
 def stream_violations(
     stream_df: DataFrame, spec: dict, id_cols: list[str], options: Options | None = None
 ) -> DataFrame:
-    plan = compile_spec(spec, stream_df.schema, options)
-    arr = checks_array(plan)
-    return stream_df.select(*id_cols, F.explode(arr).alias("_v")).select(
-        *id_cols, "_v.constraint_id", "_v.instance_path", "_v.observed_value"
-    )
+    return violations(stream_df, compile_spec(spec, stream_df.schema, options), id_cols)
 
 
 def stream_partition_verdicts(
@@ -62,9 +58,5 @@ def stream_partition_verdicts(
     return (
         stream_df.withWatermark(ts_col, watermark)
         .groupBy(*keys)
-        .agg(
-            F.count(F.lit(1)).alias("row_count"),
-            F.sum((~valid).cast("long")).alias("failed_rows"),
-            F.min(valid).alias("passed"),
-        )
+        .agg(*verdict_aggs(valid))
     )

@@ -105,7 +105,12 @@ def test_validation_path_builds_no_pickled_frames(spark, pages, tmp_path, no_pic
 # --- static check -----------------------------------------------------------
 
 LINTED = sorted(
-    [PKG / "engine.py", PKG / "streaming" / "manifest.py", PKG / "operators" / "urls.py"]
+    [
+        PKG / "engine.py",
+        PKG / "streaming" / "manifest.py",
+        PKG / "operators" / "urls.py",
+        PKG / "operators" / "text.py",
+    ]
     + list((PKG / "plans").glob("*.py"))
     + list((PKG / "sources").glob("*.py"))
 )

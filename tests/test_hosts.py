@@ -63,26 +63,38 @@ def test_blocked_domain_match_literal(spark, urls_df):
     assert got == {u: e for u, e in URLS}
 
 
+def _plan(df):
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def _domains(spark, domains):
+    return spark.createDataFrame([(d,) for d in domains], "domain string")
+
+
 def test_flag_blocked_hosts_join_matches_literal(spark, urls_df):
-    lit = collect_flags(flag_blocked_hosts(urls_df, "url", BLOCKED, impl="literal"))
-    join = collect_flags(flag_blocked_hosts(urls_df, "url", BLOCKED, impl="join"))
-    assert lit == join == {u: e for u, e in URLS}
+    # a short list takes the literal path, a DataFrame blocklist the join
+    lit = flag_blocked_hosts(urls_df, "url", BLOCKED)
+    join = flag_blocked_hosts(urls_df, "url", _domains(spark, BLOCKED))
+    assert "BroadcastHashJoin" not in _plan(lit)
+    assert "BroadcastHashJoin" in _plan(join)
+    assert collect_flags(lit) == collect_flags(join) == {u: e for u, e in URLS}
 
 
 def test_flag_blocked_hosts_most_specific_wins(spark):
     # both example.com and ads.example.com are blocked: the deeper
     # (most-specific) domain must be reported for a host under both
     df = spark.createDataFrame([("https://x.ads.example.com/",)], "url string")
-    for impl in ("literal", "join"):
-        (row,) = flag_blocked_hosts(
-            df, "url", ["example.com", "ads.example.com"], impl=impl
-        ).collect()
-        assert row["blocked_domain"] == "ads.example.com", impl
+    blocked = ["example.com", "ads.example.com"]
+    for bl in (blocked, _domains(spark, blocked)):
+        (row,) = flag_blocked_hosts(df, "url", bl).collect()
+        assert row["blocked_domain"] == "ads.example.com", type(bl)
 
 
 def test_flag_blocked_hosts_dataframe_blocklist(spark, urls_df):
-    bl = spark.createDataFrame([(d,) for d in BLOCKED], "domain string")
-    got = collect_flags(flag_blocked_hosts(urls_df, "url", bl, impl="join"))
+    got = collect_flags(flag_blocked_hosts(urls_df, "url", _domains(spark, BLOCKED)))
     assert got == {u: e for u, e in URLS}
 
 
@@ -101,15 +113,13 @@ def test_auto_selects_join_above_literal_max(spark, urls_df, monkeypatch):
     import snowy_json_spark.operators.urls as U
 
     monkeypatch.setattr(U, "BLOCKLIST_LITERAL_MAX", 2)
-    got = collect_flags(U.flag_blocked_hosts(urls_df, "url", BLOCKED, impl="auto"))
-    assert got == {u: e for u, e in URLS}
+    flagged = U.flag_blocked_hosts(urls_df, "url", BLOCKED)
+    assert "BroadcastHashJoin" in _plan(flagged)
+    assert collect_flags(flagged) == {u: e for u, e in URLS}
 
 
 def test_join_path_broadcasts_blocklist(spark, urls_df):
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        flag_blocked_hosts(urls_df, "url", BLOCKED, impl="join").explain("formatted")
-    plan = buf.getvalue()
+    plan = _plan(flag_blocked_hosts(urls_df, "url", _domains(spark, BLOCKED)))
     assert "BroadcastHashJoin" in plan, "blocklist not broadcast"
     assert "Cartesian" not in plan
 
@@ -136,10 +146,7 @@ def test_host_stats_partial_aggregation_plan(spark):
     df = spark.createDataFrame(
         [("https://h.example.com/a", "t")], "url string, text string"
     )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        host_stats(df, "url", "text").explain("formatted")
-    plan = buf.getvalue()
+    plan = _plan(host_stats(df, "url", "text"))
     # two-stage: (host, bucket) partial before the host merge
     assert plan.count("HashAggregate") >= 4, plan
     assert "Cartesian" not in plan

@@ -158,18 +158,16 @@ def test_incremental_probe_never_shuffles_index(spark, pages):
         assert "html" not in line, line
 
 
-def test_contamination_join_broadcasts_benchmark(spark, pages):
-    """Join-path decontamination: the benchmark n-gram table is
-    broadcast against the exploded document n-grams (no shuffle of the
-    corpus-sized exploded side for the membership probe), and the
-    explode subplan scans only (id, text)."""
-    from snowy_json_spark.operators.text import contamination_counts
+def test_contamination_join_broadcasts_benchmark(spark, pages, monkeypatch):
+    """Join-path decontamination (forced by a literal threshold of 0
+    n-grams): the benchmark n-gram table is broadcast against the
+    exploded document n-grams (no shuffle of the corpus-sized exploded
+    side for the membership probe), and the explode subplan scans only
+    (id, text)."""
+    import snowy_json_spark.operators.text as T
 
-    p = explain(
-        contamination_counts(
-            pages, "url", "text", ["alpha beta gamma delta"], impl="join"
-        )
-    )
+    monkeypatch.setattr(T, "CONTAMINATION_LITERAL_MAX", 0)
+    p = explain(T.contamination_counts(pages, "url", "text", ["alpha beta gamma delta"]))
     assert "BroadcastHashJoin" in p, "benchmark n-grams not broadcast"
     lines = read_schema_lines(p)
     assert any("struct<url:string,text:string>" in l for l in lines), lines

@@ -1,0 +1,125 @@
+"""Building a plan starts no Spark job.
+
+Operators that pick their physical path from the input (blocklist size
+or type, benchmark n-gram count, centroid count, ``k`` against the
+window group-limit threshold) must decide without looking at data: a
+lazy API that fires an eager job at plan time (a ``collect()`` of a
+DataFrame argument, a ``count()`` to size a branch) runs it again for
+every plan a caller builds and never shows up in the result.  Each
+regime of each selector is built under its own job group, and
+``statusTracker`` must report no job for that group.
+"""
+
+from __future__ import annotations
+
+import time
+import uuid
+
+import numpy as np
+import pytest
+from pyspark.sql import functions as F
+
+from snowy_json_spark.operators import similarity, text, topk, urls
+
+
+def _jobs_started(spark, build) -> list[int]:
+    """Job ids started while ``build()`` ran, once the listener bus has
+    caught up (a sentinel job started after it must be visible first)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group, sentinel = f"plan-{uuid.uuid4()}", f"sentinel-{uuid.uuid4()}"
+    try:
+        sc.setJobGroup(group, "plan build")
+        build()
+        sc.setJobGroup(sentinel, "listener-bus barrier")
+        spark.range(1).count()
+        deadline = time.monotonic() + 30
+        while not tracker.getJobIdsForGroup(sentinel):
+            assert time.monotonic() < deadline, "sentinel job never reported"
+            time.sleep(0.05)
+        return list(tracker.getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+@pytest.fixture(scope="module")
+def docs(spark):
+    return spark.createDataFrame(
+        [(1, "https://a.ads.example.com/x", "the quick brown fox", [0.1] * 4, "k1", 0.5)],
+        "id long, url string, text string, vec array<double>, key string, score double",
+    )
+
+
+def _words(n_words: int) -> list[str]:
+    return [" ".join(f"w{i}" for i in range(n_words))]
+
+
+# regime → (plan builder, plan-string marker, marker expected): the
+# marker tells the regime's path apart
+CASES = {
+    "blocklist_literal": (
+        lambda spark, df: urls.flag_blocked_hosts(
+            df, "url", [f"d{i}.example" for i in range(urls.BLOCKLIST_LITERAL_MAX)]
+        ),
+        "Join", False,
+    ),
+    "blocklist_long_list": (
+        lambda spark, df: urls.flag_blocked_hosts(
+            df, "url", [f"d{i}.example" for i in range(urls.BLOCKLIST_LITERAL_MAX + 1)]
+        ),
+        "Join", True,
+    ),
+    "blocklist_dataframe": (
+        lambda spark, df: urls.blocklist_filter(
+            df, "url", spark.range(3).select(F.concat(F.lit("d"), F.col("id").cast("string")))
+        ),
+        "Join", True,
+    ),
+    # n words give n - 2 distinct trigrams
+    "contamination_literal": (
+        lambda spark, df: text.contamination_counts(
+            df, "id", "text", _words(text.CONTAMINATION_LITERAL_MAX + 2)
+        ),
+        "Join", False,
+    ),
+    "contamination_join": (
+        lambda spark, df: text.contamination_counts(
+            df, "id", "text", _words(text.CONTAMINATION_LITERAL_MAX + 3)
+        ),
+        "Join", True,
+    ),
+    "ivf_expr": (
+        lambda spark, df: similarity.with_ivf_cell(
+            df, "vec", np.random.RandomState(0).rand(similarity.IVF_EXPR_MAX_CELLS, 4)
+        ),
+        "pythonUDF", False,
+    ),
+    "ivf_arrow": (
+        lambda spark, df: similarity.with_ivf_cell(
+            df, "vec", np.random.RandomState(0).rand(similarity.IVF_EXPR_MAX_CELLS + 1, 4)
+        ),
+        "pythonUDF", True,
+    ),
+    "topk_window": (
+        lambda spark, df: topk.top_k_per_key(df, "key", [F.col("score").desc()], 1000),
+        "_tkb", False,
+    ),
+    "topk_two_stage": (
+        lambda spark, df: topk.top_k_per_key(df, "key", [F.col("score").desc()], 1001),
+        "_tkb", True,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(CASES))
+def test_plan_build_starts_no_job(spark, docs, case):
+    build, marker, present = CASES[case]
+    built = []
+    assert _jobs_started(spark, lambda: built.append(build(spark, docs))) == []
+    plan = built[0]._jdf.queryExecution().optimizedPlan().toString()
+    assert (marker in plan) == present, (case, marker)
+
+
+def test_job_probe_sees_a_job(spark, docs):
+    assert _jobs_started(spark, docs.count)

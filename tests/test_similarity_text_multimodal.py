@@ -356,9 +356,11 @@ def test_contamination_flags(spark):
     assert not got[3]["contaminated"]
 
 
-def test_contamination_counts_join_matches_literal(spark):
+def test_contamination_counts_join_matches_literal(spark, monkeypatch):
     """The broadcast-join path must produce identical (n_overlap,
-    contaminated) to the literal-array path on the same corpus."""
+    contaminated) to the literal-array path on the same corpus; a
+    threshold of 0 n-grams sends the same benchmark down the join."""
+    import snowy_json_spark.operators.text as T
     from snowy_json_spark.operators.text import contamination_counts
 
     bench = ["the quick brown fox jumps", "paris is the capital of france"]
@@ -371,14 +373,13 @@ def test_contamination_counts_join_matches_literal(spark):
         (5, "the quick brown fox jumps the quick brown fox jumps"),  # dup grams
     ]
     df = spark.createDataFrame(rows, "id long, t string")
-    lit = {
-        r["id"]: (r["n_overlap"], r["contaminated"])
-        for r in contamination_counts(df, "id", "t", bench, impl="literal").collect()
-    }
-    join = {
-        r["id"]: (r["n_overlap"], r["contaminated"])
-        for r in contamination_counts(df, "id", "t", bench, impl="join").collect()
-    }
+    lit_df = contamination_counts(df, "id", "t", bench)
+    monkeypatch.setattr(T, "CONTAMINATION_LITERAL_MAX", 0)
+    join_df = contamination_counts(df, "id", "t", bench)
+    assert "Join" not in lit_df._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" in join_df._jdf.queryExecution().optimizedPlan().toString()
+    lit = {r["id"]: (r["n_overlap"], r["contaminated"]) for r in lit_df.collect()}
+    join = {r["id"]: (r["n_overlap"], r["contaminated"]) for r in join_df.collect()}
     assert lit == join
     assert lit[0] == (3, True)
     assert lit[4] == (0, False)
@@ -408,7 +409,7 @@ def test_contamination_auto_switch_bounds_plan_size(spark):
         [(0, "tok5 tok6 tok7 appears here"), (1, "nothing shared at all")],
         "id long, t string",
     )
-    out = contamination_counts(df, "id", "t", big_bench, impl="auto")
+    out = contamination_counts(df, "id", "t", big_bench)
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert len(plan) < 200_000, f"plan grew with the benchmark: {len(plan)} chars"
     got = {r["id"]: r["contaminated"] for r in out.collect()}

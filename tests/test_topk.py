@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -33,60 +34,110 @@ def rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_matches_naive_window_exactly(spark):
+THRESHOLD = "spark.sql.optimizer.windowGroupLimitThreshold"
+
+
+@pytest.fixture(params=["window", "two_stage"])
+def path(request, spark):
+    """Each path of top_k_per_key, reached through the session's
+    group-limit threshold: -1 makes every k exceed it (two-stage)."""
+    if request.param == "two_stage":
+        spark.conf.set(THRESHOLD, "-1")
+    yield request.param
+    spark.conf.unset(THRESHOLD)
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_matches_naive_window_exactly(spark, path):
     df = _skewed(spark)
     order = [F.col("score").desc(), F.col("doc_id").asc()]
     for k in (1, 5, 40):
-        for impl in ("window", "two_stage"):
-            got = top_k_per_key(df, "key", order, k, salt_col="doc_id",
-                                n_buckets=8, impl=impl)
-            assert rows(got) == rows(_naive(df, "key", order, k)), (k, impl)
+        got = top_k_per_key(df, "key", order, k, n_buckets=8)
+        assert rows(got) == rows(_naive(df, "key", order, k)), (k, path)
 
 
-def test_k_larger_than_group_keeps_all(spark):
+def test_k_larger_than_group_keeps_all(spark, path):
     df = _skewed(spark, n=60)
     order = [F.col("score").desc(), F.col("doc_id").asc()]
-    for impl in ("window", "two_stage"):
-        got = top_k_per_key(df, "key", order, 10_000, salt_col="doc_id",
-                            impl=impl)
-        assert got.count() == 60
+    got = top_k_per_key(df, "key", order, 10_000)
+    assert got.count() == 60
 
 
 def test_single_bucket_degenerates_to_naive(spark):
     df = _skewed(spark, n=200)
     order = [F.col("score").asc(), F.col("doc_id").desc()]
-    got = top_k_per_key(df, "key", order, 3, salt_col="doc_id", n_buckets=1,
-                        impl="two_stage")
-    assert rows(got) == rows(_naive(df, "key", order, 3))
+    spark.conf.set(THRESHOLD, "2")
+    try:
+        got = top_k_per_key(df, "key", order, 3, n_buckets=1)
+        assert "WindowGroupLimit" not in _plan(got)
+        assert rows(got) == rows(_naive(df, "key", order, 3))
+    finally:
+        spark.conf.unset(THRESHOLD)
 
 
 def test_window_impl_plans_partial_group_limit(spark):
-    """The default impl's skew safety IS the InferWindowGroupLimit
-    rewrite: pin `WindowGroupLimit ... Partial` (map-side top-k before
-    the shuffle) into the physical plan so a Spark upgrade or conf
-    change that drops it fails here, not on the cluster."""
-    df = _skewed(spark, n=100)
+    """At or under the threshold the skew safety IS the
+    InferWindowGroupLimit rewrite: pin `WindowGroupLimit ... Partial`
+    (map-side top-k before the shuffle) into the physical plan so a
+    Spark upgrade or conf change that drops it fails here, not on the
+    cluster.  k = 1000 is the default threshold itself."""
+    df = _skewed(spark)
     order = [F.col("score").desc(), F.col("doc_id").asc()]
-    q = top_k_per_key(df, "key", order, 5, impl="window")
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "WindowGroupLimit" in plan and "Partial" in plan, plan
-    # the two-stage impl must NOT rely on the rule: it bounds sorts
+    for k in (5, 1000):
+        plan = _plan(top_k_per_key(df, "key", order, k))
+        assert "WindowGroupLimit" in plan and "Partial" in plan, (k, plan)
+    # the two-stage path must NOT rely on the rule: it bounds sorts
     # structurally even when the rewrite is unavailable
-    spark.conf.set("spark.sql.optimizer.windowGroupLimitThreshold", "-1")
+    spark.conf.set(THRESHOLD, "-1")
     try:
-        q2 = top_k_per_key(df, "key", order, 5, salt_col="doc_id",
-                           n_buckets=4, impl="two_stage")
+        q2 = top_k_per_key(df, "key", order, 5, n_buckets=4)
+        assert "_tkb" in _plan(q2)
         assert rows(q2) == rows(_naive(df, "key", order, 5))
     finally:
-        spark.conf.set("spark.sql.optimizer.windowGroupLimitThreshold", "1000")
+        spark.conf.unset(THRESHOLD)
 
 
-def test_rank_col_is_global_rank(spark):
+def test_k_over_default_threshold_plans_two_stage(spark):
+    """k = 1001 is past Spark's default threshold (1000): the rule does
+    not fire, so a plain window here is the unmitigated plan.  The
+    operator must plan the bucketed two-stage form instead, with the
+    naive window's rows."""
+    assert int(spark.conf.get(THRESHOLD)) == 1000
+    df = _skewed(spark, n=6000, n_keys=3)
+    order = [F.col("score").desc(), F.col("doc_id").asc()]
+    naive_plan = _plan(_naive(df, "key", order, 1001))
+    assert "WindowGroupLimit" not in naive_plan, naive_plan
+    got = top_k_per_key(df, "key", order, 1001, n_buckets=4)
+    plan = _plan(got)
+    assert "_tkb" in plan and plan.count("Window [") == 2, plan
+    assert rows(got) == rows(_naive(df, "key", order, 1001))
+
+
+def test_two_stage_hashes_around_map_columns(spark):
+    """The bucket salt hashes row content; Spark refuses to hash map
+    columns, so they are left out of the hash and still pass through."""
+    df = _skewed(spark, n=300).withColumn(
+        "m", F.create_map(F.lit("doc"), F.col("doc_id"))
+    )
+    order = [F.col("score").desc(), F.col("doc_id").asc()]
+    spark.conf.set(THRESHOLD, "-1")
+    try:
+        got = top_k_per_key(df, "key", order, 4, n_buckets=4)
+        assert "_tkb" in _plan(got)
+        assert {(r["doc_id"], r["m"]["doc"]) for r in got.collect()} == {
+            (r["doc_id"], r["doc_id"]) for r in _naive(df, "key", order, 4).collect()
+        }
+    finally:
+        spark.conf.unset(THRESHOLD)
+
+
+def test_rank_col_is_global_rank(spark, path):
     df = _skewed(spark, n=400)
     order = [F.col("score").desc(), F.col("doc_id").asc()]
-    got = top_k_per_key(
-        df, "key", order, 5, salt_col="doc_id", n_buckets=4, rank_col="rank"
-    ).collect()
+    got = top_k_per_key(df, "key", order, 5, n_buckets=4, rank_col="rank").collect()
     naive = {
         (r["key"], r["doc_id"]): r["_r"]
         for r in _naive(df, "key", order, 5)
@@ -109,7 +160,7 @@ def test_k_must_be_positive(spark):
         raise AssertionError("k=0 should raise")
 
 
-def test_domain_cap_caps_per_host(spark):
+def test_domain_cap_caps_per_host(spark, path):
     df = spark.range(300).select(
         F.concat(
             F.lit("https://h"),
@@ -140,16 +191,6 @@ def test_domain_cap_caps_per_host(spark):
         .collect()
     }
     assert kept == expect
-
-
-def test_two_stage_requires_salt(spark):
-    df = _skewed(spark, n=10)
-    try:
-        top_k_per_key(df, "key", [F.col("score").desc()], 2, impl="two_stage")
-    except ValueError as e:
-        assert "salt_col" in str(e)
-    else:
-        raise AssertionError("two_stage without salt_col should raise")
 
 
 def test_top_terms_per_group_tfidf(spark):
