@@ -9,8 +9,11 @@ Lifecycle (SURVEY.md §3.1 Spark equivalent):
            projection: partition + id cols, check inputs, ``passed``,
            ``violations`` (written to out_dir/flagged and read back
            only by run_single_pass)
-             → verdicts (one groupBy), violations (one explode),
-               table checks over the projection → metrics
+             → verdicts: one groupBy, collected once; the driver rows
+               feed the result, the manifest, write_results and the
+               uniqueness join's size bound
+             → violations (one explode), table checks over the
+               projection → metrics
              → checkpoint manifest append
 
 Table-scope checks live under the spec's ``x-table-checks`` key (an
@@ -217,9 +220,10 @@ class ValidationEngine:
         schema,
         dims: dict[str, DataFrame],
         snapshot: dict | None,
+        n_rows: int,
     ) -> tuple[DataFrame | None, list[dict], dict]:
-        """Table checks over the flagged projection ``df``; schema
-        contracts against the source ``schema``."""
+        """Table checks over the flagged projection ``df`` of ``n_rows``
+        rows; schema contracts against the source ``schema``."""
         spark = df.sparkSession
         tv_parts: list[DataFrame] = []
         drift_out: list[dict] = []
@@ -254,7 +258,7 @@ class ValidationEngine:
                             for k in keys
                         }
                     )
-                v = uniqueness_violations(src, keys, cid)
+                v = uniqueness_violations(src, keys, cid, n_rows)
                 # project to the standard shape: id cols unavailable for an
                 # aggregated dup row → carry key repr in observed_value
                 tv_parts.append(
@@ -289,7 +293,7 @@ class ValidationEngine:
                 )
                 row = column_stats(df, [spec]).collect()[0].asDict()
                 stats_out.update(row)
-                svs = stats_violations(row, [spec])
+                svs = stats_violations(row, [spec], chk.get("id", kind))
                 if svs:
                     tv_parts.append(
                         local_frame(
@@ -393,8 +397,10 @@ class ValidationEngine:
     ) -> ValidationResult:
         """Validate ``df``; with a manifest, skip validated partitions.
 
-        Lazy: every output is a plan over the flagged projection of
-        ``df``, so each consumer re-scans the source.  Results equal
+        The verdicts are aggregated at call time and held on the driver,
+        and the table checks run eagerly as in :meth:`run_single_pass`.
+        Violations stay a lazy plan over the flagged projection of
+        ``df``, so writing them re-scans the source.  Results equal
         :meth:`run_single_pass`'s, which scans once.
 
         Resume is **partition pruning**: pending partitions become an
@@ -415,10 +421,11 @@ class ValidationEngine:
 
         The compact **flagged table** (partition cols + id cols + table
         check inputs + ``passed`` + the violations array) is written to
-        ``out_dir/flagged`` in a single pass, and verdicts, violation
-        rows and every table check read it back: downstream jobs read
-        the small projection, never the wide source (html stays
-        untouched on disk)."""
+        ``out_dir/flagged`` in a single pass and read back under the
+        schema it was written with.  Verdicts (collected once, one row
+        per partition key), violation rows and every table check read
+        it: downstream jobs read the small projection, never the wide
+        source (html stays untouched on disk)."""
         return self._validate(df, out_dir, dims, snapshot, manifest)
 
     def _validate(
@@ -438,21 +445,28 @@ class ValidationEngine:
             from .sources.tables import write_table
 
             write_table(flagged, f"{out_dir}/flagged")
-            flagged = spark.read.parquet(f"{out_dir}/flagged")
+            # read back under the schema just written: no inference job
+            flagged = spark.read.schema(flagged.schema).parquet(f"{out_dir}/flagged")
 
-        # no partition columns → a global aggregate: one verdict row
+        # the verdict table, aggregated once and held on the driver: one
+        # row per partition key (no partition columns → one global row),
+        # read by the manifest, the result, write_results and uniqueness
         verdicts = flagged.groupBy(*self.partition_cols).agg(
             *verdict_aggs(F.col("passed"))
         )
+        rows = verdicts.select(
+            "*", partition_key_expr(self.partition_cols).alias("_partition_key")
+        ).collect()
         viols = explode_violations(
             flagged.filter(F.size("violations") > 0), F.col("violations"), self.id_cols
         )
         table_viol, drift_out, stats_out = self._run_table_checks(
-            flagged, df.schema, dims or {}, snapshot
+            flagged, df.schema, dims or {}, snapshot, sum(r["row_count"] for r in rows)
         )
-        verdicts = self._record_manifest(spark, verdicts, manifest)
+        if manifest is not None and self.partition_cols:
+            self._record_manifest(spark, rows, manifest)
         return ValidationResult(
-            verdicts=verdicts,
+            verdicts=local_frame(spark, [r[:-1] for r in rows], verdicts.schema),
             violations=viols,
             table_violations=table_viol,
             drift=drift_out,
@@ -486,19 +500,13 @@ class ValidationEngine:
         return df.filter(keyx.isin(pending)), skipped, None
 
     def _record_manifest(
-        self, spark: SparkSession, verdicts: DataFrame, manifest: Manifest | None
-    ) -> DataFrame:
-        """Append per-partition lineage records; returns the verdicts
-        re-wrapped from the collected rows so they aren't recomputed.
+        self, spark: SparkSession, rows: list, manifest: Manifest
+    ) -> None:
+        """Append a lineage record per collected verdict row.
 
-        The key is collected as a Spark column: ``_apply_resume`` matches
-        manifest keys against the same ``partition_key_expr``, so both
-        sides share one string form (``true``, ``1.0E20``, ``…00.5``)."""
-        if manifest is None or not self.partition_cols:
-            return verdicts
-        rows = verdicts.select(
-            "*", partition_key_expr(self.partition_cols).alias("_partition_key")
-        ).collect()
+        Each row's key was collected as a Spark column: ``_apply_resume``
+        matches manifest keys against the same ``partition_key_expr``, so
+        both sides share one string form (``true``, ``1.0E20``, ``…00.5``)."""
         keyed = [
             {
                 "partition_key": r["_partition_key"],
@@ -511,7 +519,6 @@ class ValidationEngine:
             for r in rows
         ]
         manifest.append(spark, keyed)
-        return local_frame(spark, [r[:-1] for r in rows], verdicts.schema)
 
     # ------------------------------------------------------------------
     def collect_snapshot(self, df: DataFrame) -> dict:
@@ -556,16 +563,20 @@ class ValidationEngine:
     def write_results(self, res: ValidationResult, out_dir: str) -> None:
         """Write verdicts/violations/metrics as parquet tables with
         byte-stable ordering (SURVEY.md §7 hard part d): every output is
-        range-sorted on its natural key before write, so two runs over
+        sorted on its natural key before write, so two runs over
         identical inputs produce identical files — the property the
-        resume test and the oracle byte-comparison rely on."""
+        resume test and the oracle byte-comparison rely on.  The
+        verdicts are driver rows, one per partition key, so they are
+        sorted within one partition (one job) instead of range-sorted."""
         import json as _json
         import os as _os
 
         from .sources.tables import write_table
 
-        v_keys = (self.partition_cols or []) + ["passed"]
-        write_table(res.verdicts.orderBy(*v_keys), f"{out_dir}/verdicts")
+        v_keys = self.partition_cols + ["passed"]
+        write_table(
+            res.verdicts.coalesce(1).sortWithinPartitions(*v_keys), f"{out_dir}/verdicts"
+        )
         write_table(
             res.violations.orderBy(*self.id_cols, "constraint_id", "instance_path"),
             f"{out_dir}/violations",

@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.compiler import SpecError
+from ..sources.tables import literal_array
 
 #: ``tdigest_drift`` snapshots: ``percentile_approx`` at 0, 0.001, ..., 1
 GRID_PROBS = [i / 1000 for i in range(1001)]
@@ -78,7 +79,9 @@ def quantiles(
     ``probs`` (null on an empty column)."""
     return df.agg(
         F.count(F.col(column)).alias("n"),
-        F.percentile_approx(F.col(column), probs, accuracy).alias("quantiles"),
+        F.percentile_approx(F.col(column), literal_array(probs), accuracy).alias(
+            "quantiles"
+        ),
     )
 
 

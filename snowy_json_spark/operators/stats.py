@@ -72,17 +72,21 @@ def column_stats(
     return df.agg(*exprs)
 
 
-def stats_violations(stats_row: dict, specs: list[ColumnStatsSpec]) -> list[dict]:
+def stats_violations(
+    stats_row: dict, specs: list[ColumnStatsSpec], check_id: str
+) -> list[dict]:
     """Driver-side threshold evaluation on the (tiny) aggregated result.
 
-    Returns violation dicts (constraint_id, observed_value) matching the
-    row-scope violation shape."""
+    Returns violation dicts (constraint_id, instance_path,
+    observed_value) matching the row-scope violation shape; the
+    constraint id is ``#/x-table-checks/<check_id>/<stat>``, the shape
+    schema contracts use, so two checks on one column stay apart."""
     out = []
     for s in specs:
         def _emit(kind: str, observed):
             out.append(
                 {
-                    "constraint_id": f"#/x-table-checks/stats/{s.column}/{kind}",
+                    "constraint_id": f"#/x-table-checks/{check_id}/{kind}",
                     "instance_path": f"/{s.column}",
                     "observed_value": str(observed),
                 }

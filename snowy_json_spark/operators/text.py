@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.tables import local_frame
+from ..sources.tables import literal_array, local_frame
 from .dedup import normalized_text
 
 # Tiny per-language stopword profiles (public common-word lists)
@@ -532,7 +532,7 @@ def contamination_flags(
     :func:`contamination_counts`, which auto-switches to a broadcast
     join above :data:`CONTAMINATION_LITERAL_MAX` n-grams."""
     bench = benchmark_ngrams(benchmark_texts, n)
-    bench_arr = F.array(*[F.lit(g) for g in sorted(bench)])
+    bench_arr = literal_array(sorted(bench))
     grams = word_ngrams(col, n)
     n_overlap = F.size(F.array_intersect(F.array_distinct(grams), bench_arr))
     return F.struct(

@@ -96,6 +96,7 @@ def duplicate_keys_hashed(
     df: DataFrame,
     keys: list[str],
     broadcast_limit: int = HASHED_BROADCAST_LIMIT,
+    n_rows: int | None = None,
 ) -> DataFrame:
     """Hash-first duplicate detection for wide/high-cardinality keys
     (e.g. urls): identical output to :func:`duplicate_keys`, a fraction
@@ -109,15 +110,19 @@ def duplicate_keys_hashed(
     verifies on the true keys, so collisions can never produce a false
     duplicate.
 
-    Join-strategy selection is data-driven: the candidate set is cached
-    and counted (8 B/hash of bounded state; the count's input is the
-    narrow projection and its shuffle 16 B/row), and the semi-join
+    Join-strategy selection is data-driven.  A candidate hash is seen at
+    least twice, so ``n_rows`` rows give at most ``n_rows // 2``
+    candidates; within ``broadcast_limit`` the candidate set is
+    broadcast with no job at plan time.  The engine passes the row total
+    its collected verdicts hold, replacing a measurement it already
+    took.  With ``n_rows`` unknown or above the bound, the candidate set
+    is cached (never unpersisted) and counted, and the semi-join
     broadcasts only while the count stays under ``broadcast_limit``;
-    above it (web crawls run 20-50% dups) it degrades gracefully to a
-    shuffle hash join instead of dying on the broadcast ceiling.
-    Leaving the join unhinted for AQE to size was measured slower (the
-    planned SMJ materializes the probe side's full-key shuffle before
-    AQE can convert, 201 s vs 110 s at 32M/local[4])."""
+    above it (web crawls run 20-50% dups) it degrades to a shuffle hash
+    join instead of dying on the broadcast ceiling.  Leaving the join
+    unhinted for AQE to size was measured slower (the planned SMJ
+    materializes the probe side's full-key shuffle before AQE can
+    convert, 201 s vs 110 s at 32M/local[4])."""
     h = F.xxhash64(*[F.col(k) for k in keys]).alias("_h")
     cand = (
         df.select(h)
@@ -126,9 +131,12 @@ def duplicate_keys_hashed(
         .filter(F.col("_c") > 1)
         .select("_h")
     )
-    cand = cand.persist()
-    n_cand = cand.count()  # materializes the cache; one agg job
-    cand_side = F.broadcast(cand) if n_cand <= broadcast_limit else cand.hint("shuffle_hash")
+    if n_rows is not None and n_rows // 2 <= broadcast_limit:
+        cand_side = F.broadcast(cand)
+    else:
+        cand = cand.persist()
+        n_cand = cand.count()  # materializes the cache; one agg job
+        cand_side = F.broadcast(cand) if n_cand <= broadcast_limit else cand.hint("shuffle_hash")
     cand_rows = df.select(*keys, h).join(cand_side, "_h")
     return (
         cand_rows.groupBy(*keys)
@@ -137,11 +145,14 @@ def duplicate_keys_hashed(
     )
 
 
-def uniqueness_violations(df: DataFrame, keys: list[str], constraint_id: str) -> DataFrame:
+def uniqueness_violations(
+    df: DataFrame, keys: list[str], constraint_id: str, n_rows: int | None = None
+) -> DataFrame:
     """Violation rows in the engine's standard shape: one row per
     duplicated key value, found by :func:`duplicate_keys_hashed` (fewest
-    shuffle bytes on string keys)."""
-    dups = duplicate_keys_hashed(df, keys)
+    shuffle bytes on string keys); ``n_rows``, ``df``'s row count when
+    the caller already knows it, sizes the join without a job."""
+    dups = duplicate_keys_hashed(df, keys, n_rows=n_rows)
     key_repr = F.concat_ws("|", *[F.col(k).cast("string") for k in keys])
     return dups.select(
         *keys,

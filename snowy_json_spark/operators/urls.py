@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.tables import local_frame
+from ..sources.tables import literal_array, local_frame
 
 #: query parameter KEYS that never affect content identity (exact
 #: match, except the utm_ family which matches by prefix — a bare
@@ -162,7 +162,7 @@ def blocked_domain_match(url: Column, blocked_domains: list[str]) -> Column:
     host itself or any parent domain), null when allowed — the
     zero-join literal path: suffix generation + membership probe are
     one codegen'd Column expression, no shuffle, no UDF."""
-    blocked = F.array(*[F.lit(b) for b in sorted(set(blocked_domains))])
+    blocked = literal_array(sorted(set(blocked_domains)))
     matches = F.filter(
         host_suffixes(url_host(url)), lambda s: F.array_contains(blocked, s)
     )

@@ -14,7 +14,8 @@ from collections.abc import Sequence
 from datetime import timezone
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType, TimestampType
 
 TABLE_FORMAT = os.environ.get("SNOWY_TABLE_FORMAT", "parquet")
@@ -72,6 +73,23 @@ def local_frame(
             values = [v if v is None else v.astimezone(timezone.utc) for v in values]
         columns.append(pa.array(values, type=typ))
     return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow), struct)
+
+
+def literal_array(values: Sequence[float | str]) -> Column:
+    """``array(v0, v1, ...)`` of driver-side literals as one SQL fragment:
+    one py4j call, where ``F.array(*[F.lit(v) ...])`` makes one per
+    element (0.4 s for the 1001-point quantile grid).  Strings are
+    quoted with ``\\``, ``'`` and ``$`` escaped (``$`` as ``\\u0024``:
+    ``F.expr`` applies ``${var}`` substitution); anything else is
+    written as a double."""
+
+    def sql(v) -> str:
+        if isinstance(v, str):
+            v = v.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024")
+            return f"'{v}'"
+        return repr(float(v)) + "D"
+
+    return F.expr(f"array({', '.join(map(sql, values))})")
 
 
 def load_spec(path: str) -> dict[str, Any]:

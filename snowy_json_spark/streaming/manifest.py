@@ -66,7 +66,7 @@ class Manifest:
     def read(self, spark: SparkSession) -> DataFrame:
         if not os.path.exists(self.path):
             return local_frame(spark, [], MANIFEST_SCHEMA)
-        return spark.read.parquet(self.path)
+        return spark.read.schema(MANIFEST_SCHEMA).parquet(self.path)
 
     def validated_keys(self, spark: SparkSession, spec: dict) -> set[str]:
         """Partition keys already validated under the current spec."""

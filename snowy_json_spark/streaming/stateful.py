@@ -24,6 +24,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.drift import GRID_PROBS, checked_grid, grid_ks
 from ..plans.compiler import Options, compile_spec
+from ..sources.tables import literal_array
 
 OUTPUT_SCHEMA = "key string, total long, failed long, violation_rate double"
 STATE_SCHEMA = "total long, failed long"
@@ -133,7 +134,7 @@ def stream_tdigest_drift(
         .groupBy("key")
         .agg(
             F.count("_v").alias("n"),
-            F.percentile_approx("_v", GRID_PROBS, 10000).alias("_grid"),
+            F.percentile_approx("_v", literal_array(GRID_PROBS), 10000).alias("_grid"),
         )
         .select("key", "n", ks("key", "_grid").alias("ks"))
     )

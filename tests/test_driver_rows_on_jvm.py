@@ -79,7 +79,7 @@ def test_validation_path_builds_no_pickled_frames(spark, pages, tmp_path, no_pic
     first = engine().run(pages.filter("lang = 'en'"), manifest=man)
     ids = {r["constraint_id"] for r in first.table_violations.collect()}
     assert "#/x-table-checks/contract/gone" in ids
-    assert "#/x-table-checks/stats/n/max_null_rate" in ids
+    assert "#/x-table-checks/n_stats/max_null_rate" in ids
     engine().write_results(first, str(tmp_path / "first"))
 
     # resume: skips 'en', validates the rest

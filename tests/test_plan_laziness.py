@@ -2,45 +2,22 @@
 
 Operators that pick their physical path from the input (blocklist size
 or type, benchmark n-gram count, centroid count, ``k`` against the
-window group-limit threshold) must decide without looking at data: a
-lazy API that fires an eager job at plan time (a ``collect()`` of a
-DataFrame argument, a ``count()`` to size a branch) runs it again for
-every plan a caller builds and never shows up in the result.  Each
+window group-limit threshold, a row total the caller already holds)
+must decide without looking at data: a lazy API that fires an eager job
+at plan time (a ``collect()`` of a DataFrame argument, a ``count()`` to
+size a branch) runs it again for every plan a caller builds and never
+shows up in the result.  Each
 regime of each selector is built under its own job group, and
 ``statusTracker`` must report no job for that group.
 """
 
 from __future__ import annotations
 
-import time
-import uuid
-
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from snowy_json_spark.operators import similarity, text, topk, urls
-
-
-def _jobs_started(spark, build) -> list[int]:
-    """Job ids started while ``build()`` ran, once the listener bus has
-    caught up (a sentinel job started after it must be visible first)."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    group, sentinel = f"plan-{uuid.uuid4()}", f"sentinel-{uuid.uuid4()}"
-    try:
-        sc.setJobGroup(group, "plan build")
-        build()
-        sc.setJobGroup(sentinel, "listener-bus barrier")
-        spark.range(1).count()
-        deadline = time.monotonic() + 30
-        while not tracker.getJobIdsForGroup(sentinel):
-            assert time.monotonic() < deadline, "sentinel job never reported"
-            time.sleep(0.05)
-        return list(tracker.getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+from snowy_json_spark.operators import similarity, text, topk, uniqueness, urls
 
 
 @pytest.fixture(scope="module")
@@ -101,6 +78,14 @@ CASES = {
         ),
         "pythonUDF", True,
     ),
+    # the caller's row total (the fixture's one row) bounds the candidate
+    # count, so no count() sizes the join
+    "uniqueness_row_bound": (
+        lambda spark, df: uniqueness.uniqueness_violations(
+            df, ["url"], "#/x-table-checks/url_unique", n_rows=1
+        ),
+        "strategy=broadcast", True,
+    ),
     "topk_window": (
         lambda spark, df: topk.top_k_per_key(df, "key", [F.col("score").desc()], 1000),
         "_tkb", False,
@@ -113,13 +98,13 @@ CASES = {
 
 
 @pytest.mark.parametrize("case", sorted(CASES))
-def test_plan_build_starts_no_job(spark, docs, case):
+def test_plan_build_starts_no_job(spark, docs, jobs_started, case):
     build, marker, present = CASES[case]
     built = []
-    assert _jobs_started(spark, lambda: built.append(build(spark, docs))) == []
+    assert jobs_started(lambda: built.append(build(spark, docs))) == []
     plan = built[0]._jdf.queryExecution().optimizedPlan().toString()
     assert (marker in plan) == present, (case, marker)
 
 
-def test_job_probe_sees_a_job(spark, docs):
-    assert _jobs_started(spark, docs.count)
+def test_job_probe_sees_a_job(docs, jobs_started):
+    assert jobs_started(docs.count)

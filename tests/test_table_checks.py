@@ -57,9 +57,9 @@ def test_column_stats_single_pass(spark, documents):
 def test_stats_thresholds(spark, documents):
     specs = [ColumnStatsSpec("n_chars", max_value=500, exact_distinct=True)]
     row = column_stats(documents, specs).collect()[0].asDict()
-    v = stats_violations(row, specs)
+    v = stats_violations(row, specs, "n_chars_stats")
     assert len(v) == 1
-    assert v[0]["constraint_id"] == "#/x-table-checks/stats/n_chars/max_value"
+    assert v[0]["constraint_id"] == "#/x-table-checks/n_chars_stats/max_value"
     assert v[0]["observed_value"] == "558"
 
 

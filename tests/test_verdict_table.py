@@ -1,0 +1,116 @@
+"""The verdict table is aggregated once per run and held on the driver.
+
+Its collected rows, one per partition key, are ``ValidationResult.verdicts``,
+the manifest append, the ``verdicts/`` file of ``write_results`` and the
+row total that sizes the uniqueness join, so none of them runs the
+aggregate again.  These tests catch the class of bookkeeping jobs and
+leaks around it: collecting the verdicts starts no job, a run with a
+``unique`` check leaves nothing persisted, the engine reads its own
+outputs back under the schema it wrote, and the job count of a whole
+run plus its result write is pinned.
+"""
+
+from __future__ import annotations
+
+import pytest
+
+from snowy_json_spark.engine import ValidationEngine
+from snowy_json_spark.sources.pages import generate_pages, with_partition_cols
+from snowy_json_spark.streaming.manifest import Manifest
+
+SPEC = {
+    "required": ["url", "lang"],
+    "properties": {"lang": {"pattern": "^[a-z]{2}$"}},
+    "x-table-checks": [{"id": "url_unique", "kind": "unique", "keys": ["url"]}],
+}
+
+
+@pytest.fixture(scope="module")
+def pages(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("verdict_table") / "pages")
+    with_partition_cols(generate_pages(spark, 2000, 8), url_buckets=4).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _engine() -> ValidationEngine:
+    return ValidationEngine(SPEC, id_cols=["url"], partition_cols=["lang"])
+
+
+@pytest.mark.parametrize("with_manifest", [False, True], ids=["no_manifest", "manifest"])
+@pytest.mark.parametrize("single_pass", [False, True], ids=["run", "run_single_pass"])
+def test_verdicts_are_driver_rows(
+    spark, pages, tmp_path, jobs_started, single_pass, with_manifest
+):
+    eng = _engine()
+    manifest = Manifest(str(tmp_path / "manifest")) if with_manifest else None
+    if single_pass:
+        res = eng.run_single_pass(pages, str(tmp_path / "out"), manifest=manifest)
+    else:
+        res = eng.run(pages, manifest=manifest)
+    rows = []
+    assert jobs_started(lambda: rows.extend(res.verdicts.collect())) == []
+    assert sum(r["row_count"] for r in rows) == pages.count()
+    assert sorted(r["lang"] for r in rows) == sorted(
+        r["lang"] for r in pages.select("lang").distinct().collect()
+    )
+    if with_manifest:
+        recorded = {r["partition_key"]: r["row_count"] for r in manifest.read(spark).collect()}
+        assert recorded == {r["lang"]: r["row_count"] for r in rows}
+
+
+def test_unique_check_leaves_nothing_persisted(spark, pages, tmp_path):
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    eng = _engine()
+    res = eng.run_single_pass(pages, str(tmp_path / "out"))
+    eng.write_results(res, str(tmp_path / "out"))
+    assert persisted().size() == before
+
+
+def test_job_counts_are_pinned(pages, tmp_path, jobs_started):
+    """Jobs of a run plus its result write, with a ``unique`` check.  A
+    schema-inference read of the flagged table, a sizing count of the
+    uniqueness candidates, a second verdict aggregate or a range sort of
+    the verdicts each moves these counts."""
+    eng = _engine()
+    out = str(tmp_path / "single")
+    manifest = Manifest(str(tmp_path / "manifest"))
+
+    def single_pass():
+        eng.write_results(eng.run_single_pass(pages, out, manifest=manifest), out)
+
+    def lazy():
+        eng.write_results(eng.run(pages), str(tmp_path / "lazy"))
+
+    assert len(jobs_started(single_pass)) == 16
+    assert len(jobs_started(lazy)) == 12
+
+
+def test_outputs_read_back_under_the_written_schema(spark, pages, tmp_path):
+    eng = _engine()
+    out = str(tmp_path / "out")
+    manifest = Manifest(str(tmp_path / "manifest"))
+    eng.run_single_pass(pages, out, manifest=manifest)
+
+    written = pages.select(*eng._flagged_projection(pages)).schema
+    given = spark.read.schema(written).parquet(f"{out}/flagged")
+    inferred = spark.read.parquet(f"{out}/flagged")
+    assert given.schema == inferred.schema
+    assert given.collect() == inferred.collect()
+
+    assert manifest.read(spark).schema == spark.read.parquet(manifest.path).schema
+
+
+def test_column_stats_ids_name_their_check(spark):
+    """Two checks on one column with the same stat stay apart."""
+    spec = {
+        "x-table-checks": [
+            {"id": "n_soft", "kind": "column_stats", "column": "n", "max_value": 5},
+            {"id": "n_hard", "kind": "column_stats", "column": "n", "max_value": 7},
+        ]
+    }
+    df = spark.sql("SELECT * FROM VALUES ('a', 1), ('b', 9) AS t(url, n)")
+    res = ValidationEngine(spec, id_cols=["url"]).run(df)
+    ids = sorted(r["constraint_id"] for r in res.table_violations.collect())
+    assert ids == ["#/x-table-checks/n_hard/max_value", "#/x-table-checks/n_soft/max_value"]
+    assert res.stats["n__max"] == 9
