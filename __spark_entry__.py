@@ -42,6 +42,7 @@ from snowy_json_spark.operators.text import detect_language, token_count, words
 from snowy_json_spark.operators.uniqueness import duplicate_keys_salted
 from snowy_json_spark.plans.compiler import compile_spec
 from snowy_json_spark.plans.report import annotations, violations, with_verdict
+from snowy_json_spark.sources.tables import local_frame
 
 # Flagship spec: validate the `documents` table (closest analog of the
 # north-star `pages` table) — presence, lang-code shape, length bounds.
@@ -174,7 +175,8 @@ def _q_customers_without_orders(spark, sf_dir):
 
 def _q_lang_membership_documents(spark, sf_dir):
     df = _docs(spark, sf_dir)
-    ref = spark.createDataFrame([("en",), ("de",), ("fr",)], "lang string")
+    # a JVM-side dim: Spark sizes it, so the anti-join broadcasts it
+    ref = local_frame(spark, [("en",), ("de",), ("fr",)], "lang string")
     return (
         anti_join_violations(df, "lang", ref, "lang")
         .select("doc_id", "lang")

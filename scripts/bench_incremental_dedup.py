@@ -130,7 +130,7 @@ def main() -> None:
     def probe():
         hits = probe_index(
             *minhash_index(batch, "doc_id", "text", **kw),
-            idx_sigs, idx_bands, "doc_id", threshold=0.8, broadcast_new=True,
+            idx_sigs, idx_bands, "doc_id", threshold=0.8,
         )
         return hits.count()
 

@@ -10,12 +10,13 @@ user of the reference pipeline runs BOTH jobs on a cluster:
         --sample-fraction 0.5
 
 Flow (all stages documented in their operators): host-blocklist →
-Gopher quality → near-dup keep-one (`pipeline.curate_documents`) →
-optional deterministic md5-bucket sampling (`sampling.keep_fraction`)
-→ deterministic shard layout (`shards.write_training_shards`).  A
-per-stage attribution report lands next to the output
-(``<out>_report`` parquet) and is printed as one JSON line — the
-number a nightly crawl-ingest job watches.
+Gopher quality → near-dup keep-one (`pipeline.curate_documents`: exact
+Jaccard up to `EXACT_DEDUP_MAX_ROWS` quality survivors, MinHash+LSH
+above) → optional deterministic md5-bucket sampling
+(`sampling.keep_fraction`) → deterministic shard layout
+(`shards.write_training_shards`).  A per-stage attribution report lands
+next to the output (``<out>_report`` parquet) and is printed as one
+JSON line — the number a nightly crawl-ingest job watches.
 """
 
 from __future__ import annotations
@@ -41,30 +42,26 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
                     help="comma-separated blocked domain suffixes")
     ap.add_argument("--min-words", type=int, default=None)
     ap.add_argument("--min-jaccard", type=float, default=0.8)
-    ap.add_argument("--dedup-impl", default="auto",
-                    choices=["auto", "exact", "minhash"],
-                    help="dedup stage plan: auto (default — exact below "
-                         "pipeline.EXACT_DEDUP_MAX_ROWS survivors, minhash "
-                         "above), exact Jaccard (verification scale), or "
-                         "banded MinHash+LSH (corpus scale)")
-    # minhash knobs (r05 ADVICE): the library defaults (word unigrams)
-    # collide corpus-wide on templated text, so the CLI defaults the LSH
-    # path to char-5 shingles — the setting every corpus-scale exhibit
-    # uses — and exposes the banding/cap so operators can tune recall
-    # without editing code.  Word-unigram callers pass --dedup-mode word
-    # --shingle-k 1 explicitly.
+    # the survivor count picks the dedup plan (exact Jaccard up to
+    # pipeline.EXACT_DEDUP_MAX_ROWS quality survivors, MinHash+LSH
+    # above).  minhash knobs (r05 ADVICE): the library defaults (word
+    # unigrams) collide corpus-wide on templated text, so the CLI
+    # defaults the LSH path to char-5 shingles — the setting every
+    # corpus-scale exhibit uses — and exposes the banding/cap so
+    # operators can tune recall without editing code.  Word-unigram
+    # callers pass --dedup-mode word --shingle-k 1 explicitly.
     ap.add_argument("--dedup-mode", default="char", choices=["char", "word"],
                     help="shingle unit for the dedup stage (default char)")
     ap.add_argument("--shingle-k", type=int, default=5,
                     help="shingle width (default 5; chars or words per "
                          "--dedup-mode)")
     ap.add_argument("--n-hashes", type=int, default=128,
-                    help="minhash signature width (minhash impl only)")
+                    help="minhash signature width (minhash plan only)")
     ap.add_argument("--n-bands", type=int, default=16,
-                    help="LSH band count (minhash impl only)")
+                    help="LSH band count (minhash plan only)")
     ap.add_argument("--max-bucket-rows", type=int, default=1000,
                     help="drop LSH band buckets larger than this from "
-                         "candidate generation (minhash impl only; "
+                         "candidate generation (minhash plan only; "
                          "0 = uncapped)")
     ap.add_argument("--sample-fraction", type=float, default=1.0)
     ap.add_argument("--sample-seed", default="curate")
@@ -92,7 +89,6 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
         shingle_k=args.shingle_k,
         url_col=args.id_col if blocked else None,
         blocked_domains=blocked or None,
-        dedup_impl=args.dedup_impl,
         n_hashes=args.n_hashes,
         n_bands=args.n_bands,
         max_bucket_rows=args.max_bucket_rows or None,

@@ -271,15 +271,7 @@ class ValidationEngine:
                     raise SpecError(f"referential check {cid}: unknown dim {ref!r}")
                 dim = dims[ref]
                 dim_key = chk.get("ref_column", colname)
-                v = referential_violations(
-                    df,
-                    colname,
-                    dim,
-                    dim_key,
-                    cid,
-                    self.id_cols,
-                    broadcast_dim=chk.get("broadcast", True),
-                )
+                v = referential_violations(df, colname, dim, dim_key, cid, self.id_cols)
                 tv_parts.append(v.select(*self.id_cols, *VIOLATION_COLUMNS))
             elif kind == "column_stats":
                 spec = ColumnStatsSpec(
@@ -561,13 +553,14 @@ class ValidationEngine:
 
     # ------------------------------------------------------------------
     def write_results(self, res: ValidationResult, out_dir: str) -> None:
-        """Write verdicts/violations/metrics as parquet tables with
-        byte-stable ordering (SURVEY.md §7 hard part d): every output is
-        sorted on its natural key before write, so two runs over
-        identical inputs produce identical files — the property the
-        resume test and the oracle byte-comparison rely on.  The
-        verdicts are driver rows, one per partition key, so they are
-        sorted within one partition (one job) instead of range-sorted."""
+        """Write verdicts/violations/metrics as parquet tables with stable
+        ordering (SURVEY.md §7 hard part d): every output is sorted on its
+        natural key before write, so two runs over identical inputs write
+        equal rows, schema and key-value metadata, which the resume test
+        and the oracle comparison rely on.  Bytes can differ between JVM
+        processes: parquet-mr orders each footer's encoding list by hash
+        set.  The verdicts are driver rows, one per partition key, so they
+        are sorted within one partition (one job) instead of range-sorted."""
         import json as _json
         import os as _os
 

@@ -33,6 +33,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+from ..sources.tables import broadcastable
+
 _MERSENNE = (1 << 61) - 1
 
 #: the one MinHash hash family (:func:`minhash_text_udf`); part of a
@@ -789,7 +791,6 @@ def incremental_near_duplicates(
     shingle_k: int = 5,
     mode: str = "char",
     seed: int = 42,
-    broadcast_new: bool = True,
 ) -> DataFrame:
     """(new_id, old_id, est_jaccard): new-batch documents whose
     signature-estimated Jaccard against some already-indexed document
@@ -799,10 +800,10 @@ def incremental_near_duplicates(
     keys) is never shuffled — the new batch's band keys (rows×n_bands,
     a day's crawl) are broadcast and the index streams through a
     map-side hash join; candidate pairs then fetch the two signatures
-    with joins whose shuffle volume is ∝ candidates, not corpus.  Set
-    ``broadcast_new=False`` for a batch too large to broadcast — the
-    join degrades to a shuffle on (band, bucket), which a
-    (band, bucket)-bucketed stored index makes one-sided again.
+    with joins whose shuffle volume is ∝ candidates, not corpus.  A
+    batch too large to broadcast, or one Spark cannot size, takes the
+    shuffle join on (band, bucket) instead (see :func:`probe_index`),
+    which a (band, bucket)-bucketed stored index makes one-sided again.
 
     The hash family (:data:`MINHASH_FAMILY`) and parameters must equal
     those used to build the index (the index identity, see
@@ -812,9 +813,7 @@ def incremental_near_duplicates(
     new_sigs, new_bands = minhash_index(
         new_df, id_col, text_col, n_hashes, n_bands, shingle_k, mode, seed
     )
-    return probe_index(
-        new_sigs, new_bands, index_sigs, index_bands, id_col, threshold, broadcast_new
-    )
+    return probe_index(new_sigs, new_bands, index_sigs, index_bands, id_col, threshold)
 
 
 def probe_index(
@@ -824,17 +823,22 @@ def probe_index(
     index_bands: DataFrame,
     id_col: str,
     threshold: float = 0.8,
-    broadcast_new: bool = True,
 ) -> DataFrame:
     """Probe precomputed new-batch (sigs, bands) against the index —
     the signature-level half of :func:`incremental_near_duplicates`,
     exposed so callers that already hold the batch signatures (the
     streaming ingest loop, which must also append them to the index)
-    compute them exactly once."""
+    compute them exactly once.
+
+    Each broadcast hint is decided from the batch side alone
+    (``sources.tables.broadcastable`` on the batch bands, then on the
+    batch signatures), never from a join side the index inflates; a
+    batch over the threshold, or one Spark cannot size, takes the
+    shuffle joins."""
     probe = new_bands.select(
         F.col(id_col).alias("new_id"), "band", "bucket"
     )
-    if broadcast_new:
+    if broadcastable(probe):
         probe = F.broadcast(probe)
     cands = (
         index_bands.select(F.col(id_col).alias("old_id"), "band", "bucket")
@@ -845,20 +849,17 @@ def probe_index(
     a = new_sigs.select(F.col(id_col).alias("new_id"), F.col("minhash").alias("sig_a"))
     b = index_sigs.select(F.col(id_col).alias("old_id"), F.col("minhash").alias("sig_b"))
     eq = _sig_eq_count(F.col("sig_a"), F.col("sig_b"))
-    with_a = cands.join(F.broadcast(a) if broadcast_new else a, "new_id")
-    if broadcast_new:
+    if broadcastable(a):
         # fetch sig_b by STREAMING the index through a broadcast hash
         # join of (candidates + sig_a) — without the hint the planner
         # sees only the index side's (large) size estimate and picks a
         # sort-merge join that shuffles every index signature (r06
         # measurement: a 10M-doc index's 5.2 GB sig table was shuffled
-        # for 5k candidates).  ``broadcast_new`` already asserts the
-        # batch side is small, and candidates are ∝ batch × collision
-        # rate; a corpus where candidates explode should pass
-        # broadcast_new=False and take the shuffle path.
-        joined = b.join(F.broadcast(with_a), "old_id")
+        # for 5k candidates).  Candidates are ∝ batch × collision rate,
+        # so a batch small enough to broadcast bounds them too.
+        joined = b.join(F.broadcast(cands.join(F.broadcast(a), "new_id")), "old_id")
     else:
-        joined = with_a.join(b, "old_id")
+        joined = cands.join(a, "new_id").join(b, "old_id")
     return (
         joined
         .select("new_id", "old_id", (eq / F.size(F.col("sig_a"))).alias("est_jaccard"))

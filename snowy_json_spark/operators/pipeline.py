@@ -31,7 +31,7 @@ from .dedup import (
 )
 from .text import gopher_flags, repetition_flags
 
-#: 'auto' dedup_impl switches from the all-pairs exact plan to banded
+#: the dedup stage switches from the all-pairs exact plan to banded
 #: MinHash+LSH above this many quality survivors — same auto-select
 #: pattern as text.CONTAMINATION_LITERAL_MAX and the hashed-uniqueness
 #: broadcast fallback.  The exact impl's shingle-explode self-join costs
@@ -52,7 +52,6 @@ def curate_documents(
     check_repetition: bool = False,
     url_col: str | None = None,
     blocked_domains: list[str] | None = None,
-    dedup_impl: str = "auto",
     n_hashes: int = 128,
     n_bands: int = 16,
     max_bucket_rows: int | None = 1000,
@@ -71,23 +70,19 @@ def curate_documents(
     top-bigram repetition rules) drop with reason 'quality' and never
     enter dedup.
 
-    ``dedup_impl`` selects the dedup stage's plan: ``'auto'`` (default)
-    counts the quality survivors (one cheap aggregate job) and picks
-    ``'exact'`` at or below :data:`EXACT_DEDUP_MAX_ROWS`, ``'minhash'``
-    above it.  ``'exact'`` is full-corpus exact Jaccard — verification
-    scale only.  ``'minhash'`` is banded MinHash+LSH with the
-    ``max_bucket_rows`` hot-bucket cap AND the exact-hash dedup
-    pre-pass (:func:`~.dedup.minhash_near_duplicates_prepass`):
-    text-identical documents are collapsed before LSH, so they can
-    never land in over-cap buckets or inflate the verify join.
-    Estimated-Jaccard thresholding replaces the exact verifier in the
-    minhash plan, so borderline pairs can differ between impls."""
+    The survivor count picks the dedup stage's plan: the quality
+    survivors are counted (one cheap aggregate job), and at or below
+    :data:`EXACT_DEDUP_MAX_ROWS` (read at call time) the stage is
+    full-corpus exact Jaccard — verification scale only.  Above it the
+    stage is banded MinHash+LSH with the ``max_bucket_rows`` hot-bucket
+    cap AND the exact-hash dedup pre-pass
+    (:func:`~.dedup.minhash_near_duplicates_prepass`): text-identical
+    documents are collapsed before LSH, so they can never land in
+    over-cap buckets or inflate the verify join.  Estimated-Jaccard
+    thresholding replaces the exact verifier in the minhash plan, so
+    borderline pairs can differ between the two plans."""
     if blocked_domains is not None and url_col is None:
         raise ValueError("blocked_domains requires url_col")
-    if dedup_impl not in ("auto", "exact", "minhash"):
-        raise ValueError(
-            f"dedup_impl must be 'auto', 'exact' or 'minhash', got {dedup_impl!r}"
-        )
     if blocked_domains is not None:
         from .urls import blocked_domain_match
 
@@ -99,10 +94,7 @@ def curate_documents(
         quality_ok = quality_ok & repetition_flags(F.col(text_col))["keep"]
     flagged = df.withColumns({"_u_ok": url_ok, "_q_ok": quality_ok})
     survivors = flagged.filter(F.col("_u_ok") & F.col("_q_ok"))
-    if dedup_impl == "auto":
-        n_survivors = survivors.count()
-        dedup_impl = "exact" if n_survivors <= EXACT_DEDUP_MAX_ROWS else "minhash"
-    if dedup_impl == "minhash":
+    if survivors.count() > EXACT_DEDUP_MAX_ROWS:
         pairs = minhash_near_duplicates_prepass(
             survivors.filter(F.col(text_col).isNotNull()),
             id_col,

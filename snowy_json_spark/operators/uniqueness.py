@@ -95,7 +95,6 @@ HASHED_BROADCAST_LIMIT = 10_000_000
 def duplicate_keys_hashed(
     df: DataFrame,
     keys: list[str],
-    broadcast_limit: int = HASHED_BROADCAST_LIMIT,
     n_rows: int | None = None,
 ) -> DataFrame:
     """Hash-first duplicate detection for wide/high-cardinality keys
@@ -112,14 +111,14 @@ def duplicate_keys_hashed(
 
     Join-strategy selection is data-driven.  A candidate hash is seen at
     least twice, so ``n_rows`` rows give at most ``n_rows // 2``
-    candidates; within ``broadcast_limit`` the candidate set is
-    broadcast with no job at plan time.  The engine passes the row total
-    its collected verdicts hold, replacing a measurement it already
-    took.  With ``n_rows`` unknown or above the bound, the candidate set
-    is cached (never unpersisted) and counted, and the semi-join
-    broadcasts only while the count stays under ``broadcast_limit``;
-    above it (web crawls run 20-50% dups) it degrades to a shuffle hash
-    join instead of dying on the broadcast ceiling.  Leaving the join
+    candidates; within :data:`HASHED_BROADCAST_LIMIT` (read at call time)
+    the candidate set is broadcast with no job at plan time.  The engine
+    passes the row total its collected verdicts hold, replacing a
+    measurement it already took.  With ``n_rows`` unknown or above the
+    bound, the candidate set is cached (never unpersisted) and counted,
+    and the semi-join broadcasts only while the count stays within the
+    limit; above it (web crawls run 20-50% dups) it degrades to a shuffle
+    hash join instead of dying on the broadcast ceiling.  Leaving the join
     unhinted for AQE to size was measured slower (the planned SMJ
     materializes the probe side's full-key shuffle before AQE can
     convert, 201 s vs 110 s at 32M/local[4])."""
@@ -131,12 +130,12 @@ def duplicate_keys_hashed(
         .filter(F.col("_c") > 1)
         .select("_h")
     )
-    if n_rows is not None and n_rows // 2 <= broadcast_limit:
+    if n_rows is not None and n_rows // 2 <= HASHED_BROADCAST_LIMIT:
         cand_side = F.broadcast(cand)
     else:
         cand = cand.persist()
         n_cand = cand.count()  # materializes the cache; one agg job
-        cand_side = F.broadcast(cand) if n_cand <= broadcast_limit else cand.hint("shuffle_hash")
+        cand_side = F.broadcast(cand) if n_cand <= HASHED_BROADCAST_LIMIT else cand.hint("shuffle_hash")
     cand_rows = df.select(*keys, h).join(cand_side, "_h")
     return (
         cand_rows.groupBy(*keys)

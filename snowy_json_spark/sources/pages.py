@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .tables import local_frame
+
 SEED = 42
 N_HOSTS = 1000
 WINDOW_START = "2026-07-01 00:00:00"
@@ -138,7 +140,8 @@ def with_partition_cols(pages: DataFrame, url_buckets: int = 16) -> DataFrame:
 
 
 def lang_ref(spark: SparkSession) -> DataFrame:
-    """Valid-language reference dim (broadcast side of the anti-join)."""
+    """Valid-language reference dim: a JVM-side frame, so its size is
+    known and the anti-join broadcasts it."""
     codes = ["en", "de", "fr", "es", "zh", "pt", "it", "nl", "ru", "ja"]
-    return spark.createDataFrame([(c,) for c in codes], "lang string")
+    return local_frame(spark, [(c,) for c in codes], "lang string")
 

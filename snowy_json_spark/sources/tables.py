@@ -75,6 +75,18 @@ def local_frame(
     return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow), struct)
 
 
+def broadcastable(df: DataFrame) -> bool:
+    """Spark's own ``canBroadcastBySize`` rule: ``df``'s estimated size is
+    known (≥ 0) and within the session's
+    ``spark.sql.autoBroadcastJoinThreshold``; a threshold of -1 never
+    broadcasts.  The estimate comes from the optimized plan's statistics,
+    so no job runs.  A frame Spark cannot size (one parallelized from a
+    Python list, say) estimates as ``Long.MAX`` and is not broadcastable."""
+    jdf = df._jdf
+    size = int(jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return 0 <= size <= jdf.sparkSession().sessionState().conf().autoBroadcastJoinThreshold()
+
+
 def literal_array(values: Sequence[float | str]) -> Column:
     """``array(v0, v1, ...)`` of driver-side literals as one SQL fragment:
     one py4j call, where ``F.array(*[F.lit(v) ...])`` makes one per

@@ -74,7 +74,6 @@ def minhash_dedup_batch(
     mode: str = "char",
     seed: int = 42,
     intra_batch: bool = True,
-    broadcast_new: bool = True,
 ):
     """``foreachBatch`` callable for continuous near-dup-free ingestion:
     every micro-batch is probed against the persisted minhash index
@@ -90,6 +89,9 @@ def minhash_dedup_batch(
     what makes a 10^12-doc index storable; pipelines wanting an exact
     recount keep the candidate pairs and verify downstream where the
     kept texts live (:func:`...operators.dedup.exact_jaccard_for_pairs`).
+    Each probe broadcasts the batch side when Spark can size it within
+    the broadcast threshold and shuffles otherwise
+    (:func:`...operators.dedup.probe_index`).
 
     Failure semantics: every write is ``overwrite`` into a
     ``batch_id=N`` subdirectory, so a foreachBatch retry of the same
@@ -154,8 +156,7 @@ def minhash_dedup_batch(
             dup_sets = []
             if intra_batch:
                 intra = probe_index(
-                    new_sigs, new_bands, new_sigs, new_bands,
-                    id_col, threshold, broadcast_new,
+                    new_sigs, new_bands, new_sigs, new_bands, id_col, threshold
                 )
                 dup_sets.append(
                     intra.filter(F.col("old_id") < F.col("new_id")).select("new_id")
@@ -177,8 +178,7 @@ def minhash_dedup_batch(
                     .select(id_col, "band", "bucket")
                 )
                 cross = probe_index(
-                    new_sigs, new_bands, idx_sigs, idx_bands,
-                    id_col, threshold, broadcast_new,
+                    new_sigs, new_bands, idx_sigs, idx_bands, id_col, threshold
                 )
                 dup_sets.append(cross.select("new_id"))
             except AnalysisException:

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import time
 import uuid
 
@@ -40,3 +41,22 @@ def jobs_started(spark):
             sc.setLocalProperty("spark.job.description", None)
 
     return started
+
+
+@pytest.fixture(scope="session")
+def broadcast_threshold(spark):
+    """``with broadcast_threshold(value):`` runs its block under another
+    ``spark.sql.autoBroadcastJoinThreshold`` (bytes; -1 never broadcasts),
+    so a join picked by size takes the path that threshold gives it."""
+
+    @contextlib.contextmanager
+    def at(value: int):
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        default = spark.conf.get(key)
+        spark.conf.set(key, str(value))
+        try:
+            yield
+        finally:
+            spark.conf.set(key, default)
+
+    return at

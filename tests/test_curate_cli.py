@@ -7,6 +7,7 @@ import glob
 from pyspark.sql import functions as F
 
 from snowy_json_spark.curate_cli import main
+from snowy_json_spark.operators import pipeline
 from snowy_json_spark.operators.pipeline import curate_documents
 from snowy_json_spark.operators.sampling import keep_fraction
 from snowy_json_spark.sources.pages import generate_pages
@@ -52,10 +53,11 @@ def test_curate_job_end_to_end(spark, tmp_path, capsys):
     assert "sampled_out" in report
 
 
-def test_curate_job_minhash_impl(spark, tmp_path):
-    """--dedup-impl minhash wires through to the LSH dedup stage: a
-    planted url-variant exact-text duplicate drops as near_dup and the
-    CLI output equals the direct API composition with the same impl."""
+def test_curate_job_minhash_impl(spark, tmp_path, monkeypatch):
+    """Above EXACT_DEDUP_MAX_ROWS survivors (0 here) the CLI takes the
+    LSH dedup stage: a planted url-variant exact-text duplicate drops as
+    near_dup and the CLI output equals the direct API composition."""
+    monkeypatch.setattr(pipeline, "EXACT_DEDUP_MAX_ROWS", 0)
     src = str(tmp_path / "pages_mh")
     out = str(tmp_path / "shards_mh")
     base = spark.range(40).select(
@@ -75,7 +77,7 @@ def test_curate_job_minhash_impl(spark, tmp_path):
         [
             "--input", src, "--out", out,
             "--min-words", "5", "--min-jaccard", "0.8",
-            "--dedup-impl", "minhash", "--n-shards", "4",
+            "--n-shards", "4",
         ],
         spark=spark,
     )
@@ -87,7 +89,7 @@ def test_curate_job_minhash_impl(spark, tmp_path):
     pages = spark.read.parquet(src)
     cur = curate_documents(
         pages, "url", "text", min_jaccard=0.8, min_words=5,
-        dedup_impl="minhash", dedup_mode="char", shingle_k=5,
+        dedup_mode="char", shingle_k=5,
     )
     expect = cur.filter(F.col("keep"))
     back = spark.read.parquet(out)

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from snowy_json_spark.operators import pipeline
 from snowy_json_spark.operators.pipeline import curate_documents
 
 GOOD = "the quick brown fox jumps over the lazy dog and then runs far away home " * 3
@@ -100,10 +101,11 @@ def test_blocked_docs_never_reach_dedup(spark):
     assert got[1] == (False, "blocked_url")
 
 
-def test_minhash_dedup_impl_matches_exact_on_clear_corpus(spark):
-    """dedup_impl='minhash' (the corpus-scale LSH path) agrees with the
-    exact path away from the threshold boundary: exact/near dups drop
-    as near_dup, distinct docs keep, quality attribution unchanged."""
+def test_minhash_dedup_impl_matches_exact_on_clear_corpus(spark, monkeypatch):
+    """The minhash plan (the corpus-scale LSH path, reached by a survivor
+    threshold of 0) agrees with the exact path away from the Jaccard
+    boundary: exact/near dups drop as near_dup, distinct docs keep,
+    quality attribution unchanged."""
     rows = [
         (0, GOOD),
         (1, GOOD),                              # exact dup of 0
@@ -118,11 +120,12 @@ def test_minhash_dedup_impl_matches_exact_on_clear_corpus(spark):
             df, "doc_id", "text", min_jaccard=0.8, min_words=20
         ).collect()
     }
+    monkeypatch.setattr(pipeline, "EXACT_DEDUP_MAX_ROWS", 0)
     lsh = {
         r["doc_id"]: (r["keep"], r["drop_reason"])
         for r in curate_documents(
             df, "doc_id", "text", min_jaccard=0.8, min_words=20,
-            dedup_impl="minhash", shingle_k=5, dedup_mode="char",
+            shingle_k=5, dedup_mode="char",
         ).collect()
     }
     assert lsh == exact
@@ -131,43 +134,37 @@ def test_minhash_dedup_impl_matches_exact_on_clear_corpus(spark):
     assert lsh[0] == (True, None)
 
 
-def test_minhash_dedup_impl_null_text_and_bad_impl(spark):
-    import pytest as _pytest
-
+def test_minhash_dedup_null_text(spark, monkeypatch):
+    monkeypatch.setattr(pipeline, "EXACT_DEDUP_MAX_ROWS", 0)
     rows = [(0, GOOD), (1, None)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r["doc_id"]: r["drop_reason"]
         for r in curate_documents(
-            df, "doc_id", "text", min_words=20, dedup_impl="minhash",
-            shingle_k=5, dedup_mode="char",
+            df, "doc_id", "text", min_words=20, shingle_k=5, dedup_mode="char",
         ).collect()
     }
     assert got[0] is None
     assert got[1] == "quality"  # null text fails gopher keep=false
-    with _pytest.raises(ValueError, match="dedup_impl"):
-        curate_documents(df, "doc_id", "text", dedup_impl="bogus")
 
 
 def test_auto_impl_selects_by_survivor_count(spark, monkeypatch):
-    """dedup_impl='auto' (the default) picks 'exact' at or below
+    """The survivor count picks the exact plan at or below
     EXACT_DEDUP_MAX_ROWS survivors and the LSH plan above it — the plan
     pin the r05 verdict asked for."""
-    from snowy_json_spark.operators import pipeline
-
     rows = [(i, GOOD + f" tail {i}") for i in range(12)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
     small = curate_documents(df, "doc_id", "text", min_jaccard=0.8, min_words=20)
-    # below the threshold auto == exact, bit for bit
-    exact = curate_documents(
-        df, "doc_id", "text", min_jaccard=0.8, min_words=20, dedup_impl="exact"
-    )
+    # a threshold AT the survivor count still takes the exact plan, bit
+    # for bit
+    monkeypatch.setattr(pipeline, "EXACT_DEDUP_MAX_ROWS", 12)
+    exact = curate_documents(df, "doc_id", "text", min_jaccard=0.8, min_words=20)
     assert sorted(map(tuple, small.collect())) == sorted(map(tuple, exact.collect()))
     # the exact plan has no Python signature stage
     assert "ArrowEvalPython" not in small._jdf.queryExecution().executedPlan().toString()
 
-    # force the threshold under the corpus size: auto must take the
+    # force the threshold under the corpus size: the count must take the
     # LSH+prepass branch (the plan itself hides behind the
     # connected-components localCheckpoint, so intercept the call)
     calls = []
@@ -180,7 +177,7 @@ def test_auto_impl_selects_by_survivor_count(spark, monkeypatch):
     monkeypatch.setattr(pipeline, "minhash_near_duplicates_prepass", spy)
     monkeypatch.setattr(pipeline, "EXACT_DEDUP_MAX_ROWS", 5)
     curate_documents(df, "doc_id", "text", min_jaccard=0.8, min_words=20)
-    assert calls, "auto above threshold must route to the minhash prepass path"
+    assert calls, "above the threshold the count must route to the minhash prepass path"
 
 
 def test_minhash_prepass_equivalent_and_cap_immune(spark):

@@ -115,10 +115,7 @@ LINTED = sorted(
     + list((PKG / "sources").glob("*.py"))
 )
 # (file, enclosing function) sites left on the pickled route on purpose
-ALLOWED = {
-    # the synthetic-data language dim, built once before a run by tests and benches
-    ("snowy_json_spark/sources/pages.py", "lang_ref"),
-}
+ALLOWED: set[tuple[str, str]] = set()
 DRIVER_ROWS = (ast.List, ast.Tuple, ast.ListComp, ast.GeneratorExp)
 
 

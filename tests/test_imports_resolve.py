@@ -12,6 +12,7 @@ from __future__ import annotations
 import ast
 import importlib
 import importlib.util
+import inspect
 from pathlib import Path
 
 import pytest
@@ -191,3 +192,136 @@ def test_unused_private_check_sees_names():
     )
     b = "from a import _used\nx = _used()\ny = mod._K\n"
     assert _unused_private_names({"a": a, "b": b}) == ["a:_A", "a:_C", "a:_rec"]
+
+
+# --- keyword names at the package's call sites outside it --------------------
+
+CALLERS = sorted(
+    [p for d in ("scripts", "perfbench", "tests") for p in (ROOT / d).rglob("*.py")]
+    + [*ROOT.glob("bench*.py")]
+    + [ROOT / n for n in ("curate_job.py", "validate_job.py", "__spark_entry__.py")]
+)
+
+
+def _resolve(path: str):
+    """The object a dotted ``snowy_json_spark`` path names, or None."""
+    parts = path.split(".")
+    for i in range(len(parts), 0, -1):
+        try:
+            obj = importlib.import_module(".".join(parts[:i]))
+        except ImportError:
+            continue
+        for name in parts[i:]:
+            obj = getattr(obj, name, None)
+        return obj
+    return None
+
+
+def _dotted(node: ast.expr) -> list[str] | None:
+    if isinstance(node, ast.Name):
+        return [node.id]
+    if isinstance(node, ast.Attribute) and (base := _dotted(node.value)):
+        return base + [node.attr]
+    return None
+
+
+def _bad_call(call: ast.Call, fn) -> str | None:
+    """Why ``call`` cannot bind to ``fn``'s signature: an unknown keyword,
+    or more positional arguments than it takes."""
+    try:
+        params = inspect.signature(fn).parameters.values()
+    except (TypeError, ValueError):
+        return None
+    kinds = {p.kind for p in params}
+    named = {p.name for p in params if p.kind in (p.POSITIONAL_OR_KEYWORD, p.KEYWORD_ONLY)}
+    if inspect.Parameter.VAR_KEYWORD not in kinds:
+        unknown = [k.arg for k in call.keywords if k.arg is not None and k.arg not in named]
+        if unknown:
+            return f"no parameter {', '.join(unknown)}"
+    positional = [p for p in params if p.kind in (p.POSITIONAL_ONLY, p.POSITIONAL_OR_KEYWORD)]
+    starred = any(isinstance(a, ast.Starred) for a in call.args)
+    if not starred and inspect.Parameter.VAR_POSITIONAL not in kinds:
+        if len(call.args) > len(positional):
+            return f"{len(call.args)} positional arguments, takes {len(positional)}"
+    return None
+
+
+def _call_errors(source: str) -> list[tuple[int, str, str]]:
+    """(line, called path, reason) per call into a ``snowy_json_spark``
+    function or class whose arguments its signature does not accept.
+    Import bindings are scoped: a function-local import is seen in that
+    function only."""
+    found: list[tuple[int, str, str]] = []
+    scopes: list[dict[str, str | None]] = [{}]
+
+    class Visitor(ast.NodeVisitor):
+        def visit_FunctionDef(self, node):
+            scopes.append({})
+            self.generic_visit(node)
+            scopes.pop()
+
+        visit_AsyncFunctionDef = visit_FunctionDef
+
+        def visit_Import(self, node):
+            for a in node.names:
+                local = a.asname or a.name.partition(".")[0]
+                scopes[-1][local] = a.name if a.asname else local
+
+        def visit_ImportFrom(self, node):
+            for a in node.names:
+                path = f"{node.module}.{a.name}" if node.module and not node.level else None
+                scopes[-1][a.asname or a.name] = path
+
+        def visit_Call(self, node):
+            chain = _dotted(node.func)
+            bound = next((s[chain[0]] for s in reversed(scopes) if chain and chain[0] in s), None)
+            if bound and bound.partition(".")[0] == "snowy_json_spark":
+                path = ".".join([bound, *chain[1:]])
+                fn = _resolve(path)
+                module = getattr(fn, "__module__", None) or ""
+                if callable(fn) and module.startswith("snowy_json_spark"):
+                    if why := _bad_call(node, fn):
+                        found.append((node.lineno, path, why))
+            self.generic_visit(node)
+
+    Visitor().visit(ast.parse(source))
+    return found
+
+
+@pytest.mark.parametrize("path", CALLERS, ids=lambda p: str(p.relative_to(ROOT)))
+def test_package_calls_pass_accepted_arguments(path):
+    """A caller outside the package passes only keyword names the called
+    function accepts (or it takes ``**kwargs``) and no more positional
+    arguments than it takes: a removed or renamed parameter otherwise
+    fails only when that script or branch runs."""
+    errors = [f"{path.name}:{line}: {fn}: {why}" for line, fn, why in _call_errors(path.read_text())]
+    assert not errors, "\n".join(errors)
+
+
+def test_call_check_sees_each_shape():
+    src = '''
+import snowy_json_spark.operators.uniqueness
+from snowy_json_spark.operators import dedup
+from snowy_json_spark.operators.referential import anti_join_violations as ajv
+
+def f(df, args, kw):
+    from snowy_json_spark.operators.pipeline import curate_documents
+    ajv(df, "k", df, "k", broadcast_dim=True)
+    dedup.probe_index(df, df, df, df, "id", broadcast_new=False)
+    snowy_json_spark.operators.uniqueness.duplicate_keys_hashed(df, ["k"], broadcast_limit=1)
+    ajv(df, "k", df, "k", True, False)
+    ajv(df, "k", df, "k", ignore_nulls=False)
+    ajv(*args, **kw)
+    curate_documents(df, "id", "text", min_words=3)
+
+def g(df):
+    from os.path import join as ajv
+    ajv(df, broadcast_dim=1)
+    curate_documents(df, nothing=1)
+'''
+    assert [(line, fn.rpartition(".")[2], why) for line, fn, why in _call_errors(src)] == [
+        (8, "anti_join_violations", "no parameter broadcast_dim"),
+        (9, "probe_index", "no parameter broadcast_new"),
+        (10, "duplicate_keys_hashed", "no parameter broadcast_limit"),
+        (11, "anti_join_violations", "6 positional arguments, takes 5"),
+    ]

@@ -2,8 +2,8 @@
 
 An operator with two physical paths selects between them from what it
 can observe (an input's size or type, a session conf); it takes no
-``impl=`` / ``*_impl=`` argument and no ``salt_col=`` naming the column
-its buckets hash.  This walks the AST of every function (lambdas
+``impl=`` / ``*_impl=`` argument, no ``salt_col=`` naming the column
+its buckets hash and no ``broadcast*=`` join-strategy switch or bound.  This walks the AST of every function (lambdas
 included) under ``snowy_json_spark/`` and flags such parameters.
 """
 
@@ -16,13 +16,9 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 PKG = ROOT / "snowy_json_spark"
 
-FORBIDDEN = re.compile(r"^(impl|\w+_impl|salt_col)$")
+FORBIDDEN = re.compile(r"^(impl|\w+_impl|salt_col|broadcast\w*)$")
 # (file, function, parameter) left on purpose
-ALLOWED = {
-    # the curation pipeline's dedup stage: decided from an eager count
-    # of the pre-pass survivors, which is still a caller override today
-    ("snowy_json_spark/operators/pipeline.py", "curate_documents", "dedup_impl"),
-}
+ALLOWED: set[tuple[str, str, str]] = set()
 
 
 def _params(node: ast.FunctionDef | ast.AsyncFunctionDef | ast.Lambda) -> list[str]:
@@ -68,8 +64,11 @@ def b(df, *, dedup_impl="auto"): pass
 def c(df, salt_col=None): pass
 async def d(impl, /): pass
 f = lambda x, impl=None: x
-def ok(df, implement=1, simple=2, salt_buckets=3): pass
+def ok(df, implement=1, simple=2, salt_buckets=3, n_broadcasts=4): pass
+def e(fact, dim, broadcast_dim=True): pass
+def g(new, *, broadcast_new=True, broadcast_limit=10): pass
 """
-    assert [(line, p) for line, _, p in _sites(src)] == [
-        (2, "impl"), (3, "dedup_impl"), (4, "salt_col"), (5, "impl"), (6, "impl")
+    assert sorted((line, p) for line, _, p in _sites(src)) == [
+        (2, "impl"), (3, "dedup_impl"), (4, "salt_col"), (5, "impl"), (6, "impl"),
+        (8, "broadcast_dim"), (9, "broadcast_limit"), (9, "broadcast_new"),
     ]

@@ -24,6 +24,7 @@ from snowy_json_spark.operators.text import (
     remove_repeated_paragraphs,
     repeated_paragraphs,
 )
+from snowy_json_spark.sources.tables import local_frame
 
 SEP = "\n\n"
 
@@ -134,7 +135,8 @@ def split_corpus(spark):
              f"while reciting paragraph {i * 7} of the manual")
         for i in range(20)
     ]
-    corpus = spark.createDataFrame(base, "doc_id long, text string")
+    # JVM-side frames: Spark sizes them, so the batch probe can broadcast
+    corpus = local_frame(spark, base, "doc_id long, text string")
     # new batch: 3 near-copies of corpus docs + 2 fresh docs
     new_rows = [
         (1000 + i, base[i][1] + " near copy suffix") for i in (2, 7, 11)
@@ -142,7 +144,7 @@ def split_corpus(spark):
         (2000, "completely unrelated text about spark partitions and shuffles"),
         (2001, "another fresh document mentioning watermarks and state stores"),
     ]
-    new = spark.createDataFrame(new_rows, "doc_id long, text string")
+    new = local_frame(spark, new_rows, "doc_id long, text string")
     return corpus, new
 
 
@@ -188,22 +190,22 @@ def test_incremental_matches_exact_cross_jaccard(split_corpus):
     assert verified == brute
 
 
-def test_incremental_no_broadcast_same_result(split_corpus):
+def test_incremental_no_broadcast_same_result(split_corpus, broadcast_threshold):
+    """The batch is broadcast at the session threshold and shuffled at
+    -1; both probes find the same pairs."""
     corpus, new = split_corpus
     sigs, bands = minhash_index(corpus, "doc_id", "text", n_hashes=64, n_bands=32)
     kw = dict(threshold=0.5, n_hashes=64, n_bands=32)
-    a = {
-        (r["new_id"], r["old_id"])
-        for r in incremental_near_duplicates(
-            new, sigs, bands, "doc_id", "text", broadcast_new=True, **kw
-        ).collect()
-    }
-    b = {
-        (r["new_id"], r["old_id"])
-        for r in incremental_near_duplicates(
-            new, sigs, bands, "doc_id", "text", broadcast_new=False, **kw
-        ).collect()
-    }
+
+    def probe():
+        out = incremental_near_duplicates(new, sigs, bands, "doc_id", "text", **kw)
+        plan = out._jdf.queryExecution().sparkPlan().toString()
+        return plan, {(r["new_id"], r["old_id"]) for r in out.collect()}
+
+    bplan, a = probe()
+    with broadcast_threshold(-1):
+        splan, b = probe()
+    assert "BroadcastHashJoin" in bplan and "BroadcastHashJoin" not in splan
     assert a == b and a
 
 

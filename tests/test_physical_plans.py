@@ -136,9 +136,9 @@ def test_repeated_paragraph_removal_plan(spark, pages):
 
 
 def test_incremental_probe_never_shuffles_index(spark, pages):
-    """Cross-corpus incremental dedup: with broadcast_new=True the
-    index side (10^12 rows at scale) must stream through map-side hash
-    joins — zero SortMergeJoin / ShuffledHashJoin anywhere in the plan,
+    """Cross-corpus incremental dedup: with a batch Spark sizes within
+    the broadcast threshold, the index side (10^12 rows at scale) must
+    stream through map-side hash joins — zero SortMergeJoin / ShuffledHashJoin anywhere in the plan,
     and every scan pruned to (id, text)."""
     from snowy_json_spark.operators.dedup import (
         incremental_near_duplicates,

@@ -17,7 +17,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from snowy_json_spark.operators import similarity, text, topk, uniqueness, urls
+from snowy_json_spark.operators import dedup, referential, similarity, text, topk, uniqueness, urls
+from snowy_json_spark.sources.tables import local_frame
 
 
 @pytest.fixture(scope="module")
@@ -108,3 +109,45 @@ def test_plan_build_starts_no_job(spark, docs, jobs_started, case):
 
 def test_job_probe_sees_a_job(docs, jobs_started):
     assert jobs_started(docs.count)
+
+
+def _referential(spark, df):
+    dim = local_frame(spark, [(c,) for c in ("k1", "k2", "k1")], "key string")
+    return referential.anti_join_violations(df, "key", dim, "key")
+
+
+def _probe(spark, df):
+    batch = local_frame(spark, [(7, "the quick brown fox jumps")], "id long, text string")
+    new_sigs, new_bands = dedup.minhash_index(batch, "id", "text")
+    index_sigs, index_bands = dedup.minhash_index(df, "id", "text")
+    return dedup.probe_index(new_sigs, new_bands, index_sigs, index_bands, "id")
+
+
+# join regime → (plan builder, spark.sql.autoBroadcastJoinThreshold or
+# None for the session's, physical-operator counts the plan must show).
+# A sized dim or batch under the threshold is broadcast with no
+# dim-side aggregate; at -1 the referential dim is reduced to distinct
+# keys (partial + final HashAggregate) and every join shuffles.
+JOIN_CASES = {
+    "referential_broadcast": (
+        _referential, None, {"BroadcastHashJoin": 1, "SortMergeJoin": 0, "HashAggregate": 0}
+    ),
+    "referential_shuffle": (
+        _referential, -1, {"BroadcastHashJoin": 0, "SortMergeJoin": 1, "HashAggregate": 2}
+    ),
+    "probe_index_broadcast": (_probe, None, {"BroadcastHashJoin": 3, "SortMergeJoin": 0}),
+    "probe_index_shuffle": (_probe, -1, {"BroadcastHashJoin": 0, "SortMergeJoin": 3}),
+}
+
+
+@pytest.mark.parametrize("case", sorted(JOIN_CASES))
+def test_join_regime_builds_without_job(spark, docs, jobs_started, broadcast_threshold, case):
+    """The size rule decides from plan statistics alone, and each regime
+    plans the joins it names."""
+    build, threshold, counts = JOIN_CASES[case]
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    with broadcast_threshold(threshold if threshold is not None else spark.conf.get(key)):
+        built = []
+        assert jobs_started(lambda: built.append(build(spark, docs))) == []
+        plan = built[0]._jdf.queryExecution().sparkPlan().toString()
+    assert {op: plan.count(op) for op in counts} == counts, plan

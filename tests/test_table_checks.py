@@ -27,6 +27,7 @@ from snowy_json_spark.operators.stats import (
     column_stats,
     stats_violations,
 )
+from snowy_json_spark.operators import uniqueness
 from snowy_json_spark.operators.uniqueness import (
     duplicate_keys,
     duplicate_keys_hashed,
@@ -113,6 +114,30 @@ def test_referential_anti_join(spark):
     assert all(r["constraint_id"] == "#/x/ref/custkey" for r in rows)
 
 
+def test_referential_regimes_agree_on_duplicated_dim(spark, broadcast_threshold):
+    """A dim holding every key 200 times: broadcast whole at the session
+    threshold, reduced to distinct keys and shuffled at -1; both give
+    the same violating fact rows."""
+    from snowy_json_spark.sources.tables import local_frame
+
+    fact = local_frame(
+        spark, [(i, f"k{i % 7}" if i % 5 else None) for i in range(60)], "id long, k string"
+    )
+    dim = local_frame(spark, [(f"k{i % 4}",) for i in range(800)], "key string")
+
+    def violations():
+        bad = anti_join_violations(fact, "k", dim, "key")
+        return bad._jdf.queryExecution().sparkPlan().toString(), sorted(map(tuple, bad.collect()))
+
+    bplan, brows = violations()
+    with broadcast_threshold(-1):
+        splan, srows = violations()
+    assert "BroadcastHashJoin" in bplan and "HashAggregate" not in bplan
+    assert "BroadcastHashJoin" not in splan and "HashAggregate" in splan
+    assert brows == srows
+    assert {k for _, k in brows} == {"k4", "k5", "k6"}
+
+
 def test_membership_set(spark, documents):
     v = membership_check_broadcast_set(
         documents, "lang", ["en", "fr", "de"], "#/x/lang", ["doc_id"]
@@ -155,15 +180,16 @@ def test_drift_missing_group():
     assert status["b"] == "missing_current"
 
 
-def test_hashed_shuffle_fallback_on_high_dup_corpus(spark):
-    """50%-duplicate corpus with broadcast_limit=1: the candidate set
-    exceeds the limit so the semi-join must degrade to a shuffle join
-    (no BroadcastExchange of the candidates) while producing output
-    identical to the plain strategy."""
+def test_hashed_shuffle_fallback_on_high_dup_corpus(spark, monkeypatch):
+    """50%-duplicate corpus with HASHED_BROADCAST_LIMIT at 1: the
+    candidate set exceeds the limit so the semi-join must degrade to a
+    shuffle join (no BroadcastExchange of the candidates) while
+    producing output identical to the plain strategy."""
+    monkeypatch.setattr(uniqueness, "HASHED_BROADCAST_LIMIT", 1)
     rows = [(f"u{i % 500}",) for i in range(1000)]  # every key ×2
     df = spark.createDataFrame(rows, "url string").repartition(8)
     plain = {(r["url"], r["dup_count"]) for r in duplicate_keys(df, ["url"]).collect()}
-    fallback = duplicate_keys_hashed(df, ["url"], broadcast_limit=1)
+    fallback = duplicate_keys_hashed(df, ["url"])
     got = {(r["url"], r["dup_count"]) for r in fallback.collect()}
     assert got == plain and len(got) == 500
     import contextlib
