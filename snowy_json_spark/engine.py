@@ -9,11 +9,13 @@ Lifecycle (SURVEY.md §3.1 Spark equivalent):
            projection: partition + id cols, check inputs, ``passed``,
            ``violations`` (written to out_dir/flagged and read back
            only by run_single_pass)
+             → scalar checks (column_stats, quantile_drift,
+               tdigest_drift): one global ``agg`` over the projection
              → verdicts: one groupBy, collected once; the driver rows
                feed the result, the manifest, write_results and the
                uniqueness join's size bound
-             → violations (one explode), table checks over the
-               projection → metrics
+             → violations (one explode), the other table checks over
+               the projection → metrics
              → checkpoint manifest append
 
 Table-scope checks live under the spec's ``x-table-checks`` key (an
@@ -45,15 +47,14 @@ from .operators.drift import (
     HistogramSpec,
     checked_grid,
     collect_histogram,
-    collect_quantiles,
     drift_verdicts,
     grid_ks,
     grid_snapshot,
+    quantile_aggs,
     quantile_drift_verdict,
-    quantiles,
 )
 from .operators.referential import referential_violations
-from .operators.stats import ColumnStatsSpec, column_stats, stats_violations
+from .operators.stats import ColumnStatsSpec, stats_exprs, stats_violations
 from .operators.uniqueness import uniqueness_violations
 from .plans.compiler import Compiled, Options, SpecError, compile_spec
 from .plans.report import (
@@ -67,6 +68,39 @@ from .streaming.manifest import Manifest, lineage_hash, partition_key_expr
 
 #: table-check kinds whose input may be a derived ``expr`` column
 DRIFT_KINDS = ("drift", "quantile_drift", "tdigest_drift")
+
+#: ``quantile_drift`` probabilities when the check names none
+DEFAULT_PROBS = [0.25, 0.5, 0.75, 0.9, 0.99]
+
+#: table-check kinds read off one global aggregate
+#: (:meth:`ValidationEngine._scalar_aggs`)
+SCALAR_KINDS = ("column_stats", "quantile_drift", "tdigest_drift")
+
+
+def _stats_spec(chk: dict) -> ColumnStatsSpec:
+    return ColumnStatsSpec(
+        column=chk["column"],
+        max_null_rate=chk.get("max_null_rate"),
+        min_value=chk.get("min_value"),
+        max_value=chk.get("max_value"),
+        min_distinct=chk.get("min_distinct"),
+        max_distinct=chk.get("max_distinct"),
+        exact_distinct=chk.get("exact_distinct", False),
+    )
+
+
+def _check_values(row: dict, i: int) -> dict:
+    """Table check ``i``'s values in a row of :meth:`ValidationEngine._scalar_aggs`
+    aggregates, under their unprefixed names."""
+    prefix = f"t{i}__"
+    return {k[len(prefix):]: v for k, v in row.items() if k.startswith(prefix)}
+
+
+def _quantile_values(chk: dict, values: dict) -> dict[str, float]:
+    """A ``quantile_drift`` check's aggregated quantiles keyed by
+    probability; empty when the column has no non-null value."""
+    probs = chk.get("probs", DEFAULT_PROBS)
+    return {str(p): float(v) for p, v in zip(probs, values["quantiles"] or [])}
 
 
 def _schema_violations(schema, chk: dict, cid: str) -> list[tuple]:
@@ -214,6 +248,31 @@ class ValidationEngine:
             self._compile_cache[key] = projection
         return projection
 
+    def _scalar_aggs(
+        self, df: DataFrame, kinds: tuple[str, ...], snapshot: dict | None = None
+    ) -> list[Column]:
+        """Global aggregates of the table checks of ``kinds``:
+        ``column_stats``' stats, ``quantile_drift``'s and
+        ``tdigest_drift``'s ``percentile_approx`` (the latter over
+        ``GRID_PROBS``) with the non-null count.  Check ``i``'s are named
+        ``t{i}__<name>``, so two checks on one column never collide
+        (:func:`_check_values` reads them back).  Given a ``snapshot``, a
+        ``tdigest_drift`` it has no entry for is left out: that check
+        reports ``missing_snapshot`` and would discard its grid."""
+        out: list[Column] = []
+        for i, chk in enumerate(self.table_checks):
+            kind, prefix = chk.get("kind"), f"t{i}__"
+            if kind not in kinds:
+                continue
+            if kind == "column_stats":
+                out += stats_exprs(df, _stats_spec(chk), prefix)
+            elif kind == "quantile_drift":
+                probs = chk.get("probs", DEFAULT_PROBS)
+                out += quantile_aggs(chk["column"], probs, prefix=prefix)
+            elif kind == "tdigest_drift" and (snapshot is None or chk.get("id") in snapshot):
+                out += quantile_aggs(chk["column"], GRID_PROBS, prefix=prefix)
+        return out
+
     def _run_table_checks(
         self,
         df: DataFrame,
@@ -221,9 +280,12 @@ class ValidationEngine:
         dims: dict[str, DataFrame],
         snapshot: dict | None,
         n_rows: int,
+        scalars: dict,
     ) -> tuple[DataFrame | None, list[dict], dict]:
         """Table checks over the flagged projection ``df`` of ``n_rows``
-        rows; schema contracts against the source ``schema``."""
+        rows; schema contracts against the source ``schema``; the scalar
+        checks read their values from ``scalars``, the row of
+        :meth:`_scalar_aggs` aggregated over that projection."""
         spark = df.sparkSession
         tv_parts: list[DataFrame] = []
         drift_out: list[dict] = []
@@ -233,7 +295,7 @@ class ValidationEngine:
         no_ids = (None,) * len(self.id_cols)
         viol_ddl = ", ".join(f"{c} string" for c in self.id_cols + VIOLATION_COLUMNS)
 
-        for chk in self.table_checks:
+        for i, chk in enumerate(self.table_checks):
             kind = chk.get("kind")
             cid = f"#/x-table-checks/{chk.get('id', kind)}"
             if kind == "schema":
@@ -274,18 +336,9 @@ class ValidationEngine:
                 v = referential_violations(df, colname, dim, dim_key, cid, self.id_cols)
                 tv_parts.append(v.select(*self.id_cols, *VIOLATION_COLUMNS))
             elif kind == "column_stats":
-                spec = ColumnStatsSpec(
-                    column=chk["column"],
-                    max_null_rate=chk.get("max_null_rate"),
-                    min_value=chk.get("min_value"),
-                    max_value=chk.get("max_value"),
-                    min_distinct=chk.get("min_distinct"),
-                    max_distinct=chk.get("max_distinct"),
-                    exact_distinct=chk.get("exact_distinct", False),
-                )
-                row = column_stats(df, [spec]).collect()[0].asDict()
+                row = _check_values(scalars, i)
                 stats_out.update(row)
-                svs = stats_violations(row, [spec], chk.get("id", kind))
+                svs = stats_violations(row, [_stats_spec(chk)], chk.get("id", kind))
                 if svs:
                     tv_parts.append(
                         local_frame(
@@ -324,8 +377,7 @@ class ValidationEngine:
                         v["check_id"] = chk.get("id")
                         drift_out.append(v)
             elif kind == "quantile_drift":
-                probs = chk.get("probs", [0.25, 0.5, 0.75, 0.9, 0.99])
-                cur_q = collect_quantiles(df, chk["column"], probs)
+                cur_q = _quantile_values(chk, _check_values(scalars, i))
                 snap_q = (snapshot or {}).get(chk.get("id"))
                 if snap_q is None:
                     v = {"group": None, "psi": None, "ks": None,
@@ -347,15 +399,15 @@ class ValidationEngine:
                     # a typo'd check id or an absent baseline must NOT
                     # self-compare into a silent KS=0 'pass' (round-3
                     # ADVICE): report the missing baseline explicitly.
-                    # The current sketch is not computed — it is an eager
-                    # full-scan job whose output would be discarded (r06)
+                    # The current grid is not aggregated: it would be
+                    # discarded (r06)
                     v = {"group": None, "psi": None, "ks": None,
                          "status": "missing_snapshot"}
                     v["check_id"] = chk.get("id")
                     drift_out.append(v)
                     continue
                 snap = checked_grid(snap, chk.get("id"))
-                cur = grid_snapshot(quantiles(df, chk["column"], GRID_PROBS).first())
+                cur = grid_snapshot(_check_values(scalars, i))
                 if cur["n"] == 0 or snap["n"] == 0:
                     v = {"group": None, "psi": None, "ks": None,
                          "status": "missing_current" if cur["n"] == 0 else "missing_snapshot"}
@@ -440,6 +492,10 @@ class ValidationEngine:
             # read back under the schema just written: no inference job
             flagged = spark.read.schema(flagged.schema).parquet(f"{out_dir}/flagged")
 
+        # every scalar table check's values, in one aggregate job
+        aggs = self._scalar_aggs(flagged, SCALAR_KINDS, snapshot or {})
+        scalars = flagged.agg(*aggs).first().asDict() if aggs else {}
+
         # the verdict table, aggregated once and held on the driver: one
         # row per partition key (no partition columns → one global row),
         # read by the manifest, the result, write_results and uniqueness
@@ -453,7 +509,12 @@ class ValidationEngine:
             flagged.filter(F.size("violations") > 0), F.col("violations"), self.id_cols
         )
         table_viol, drift_out, stats_out = self._run_table_checks(
-            flagged, df.schema, dims or {}, snapshot, sum(r["row_count"] for r in rows)
+            flagged,
+            df.schema,
+            dims or {},
+            snapshot,
+            sum(r["row_count"] for r in rows),
+            scalars,
         )
         if manifest is not None and self.partition_cols:
             self._record_manifest(spark, rows, manifest)
@@ -518,10 +579,14 @@ class ValidationEngine:
         drift check the current histogram (or quantile sketch values) —
         the 'pages_snapshot_stats' artifact of FIXTURES.md §1.  Tiny
         (KBs), JSON-serializable, broadcastable.  Drift inputs come
-        from the same projection the validation runs read."""
+        from the same projection the validation runs read; the
+        ``quantile_drift`` and ``tdigest_drift`` entries share one
+        aggregate (:meth:`_scalar_aggs`)."""
         snap: dict = {}
         src = df.select(*self._check_inputs(df).values())
-        for chk in self.table_checks:
+        aggs = self._scalar_aggs(src, ("quantile_drift", "tdigest_drift"))
+        row = src.agg(*aggs).first().asDict() if aggs else {}
+        for i, chk in enumerate(self.table_checks):
             kind = chk.get("kind")
             if kind == "drift":
                 hspec = HistogramSpec(
@@ -529,12 +594,9 @@ class ValidationEngine:
                 )
                 snap[chk["id"]] = collect_histogram(src, hspec, chk.get("group_by"))
             elif kind == "quantile_drift":
-                probs = chk.get("probs", [0.25, 0.5, 0.75, 0.9, 0.99])
-                snap[chk["id"]] = collect_quantiles(src, chk["column"], probs)
+                snap[chk["id"]] = _quantile_values(chk, _check_values(row, i))
             elif kind == "tdigest_drift":
-                snap[chk["id"]] = grid_snapshot(
-                    quantiles(src, chk["column"], GRID_PROBS).first()
-                )
+                snap[chk["id"]] = grid_snapshot(_check_values(row, i))
         return snap
 
     @staticmethod

@@ -72,17 +72,24 @@ def histogram(
     )
 
 
+def quantile_aggs(
+    column: str, probs: list[float], accuracy: int = 10000, prefix: str = ""
+) -> list[Column]:
+    """Global aggregates ``<prefix>n``, the non-null count, and
+    ``<prefix>quantiles``, ``percentile_approx`` at ``probs`` (null on an
+    empty column)."""
+    c = F.col(column)
+    return [
+        F.count(c).alias(f"{prefix}n"),
+        F.percentile_approx(c, literal_array(probs), accuracy).alias(f"{prefix}quantiles"),
+    ]
+
+
 def quantiles(
     df: DataFrame, column: str, probs: list[float], accuracy: int = 10000
 ) -> DataFrame:
-    """One row: the non-null count ``n`` and ``percentile_approx`` at
-    ``probs`` (null on an empty column)."""
-    return df.agg(
-        F.count(F.col(column)).alias("n"),
-        F.percentile_approx(F.col(column), literal_array(probs), accuracy).alias(
-            "quantiles"
-        ),
-    )
+    """One row of :func:`quantile_aggs`: ``n`` and ``quantiles``."""
+    return df.agg(*quantile_aggs(column, probs, accuracy))
 
 
 # ---------------------------------------------------------------------------
@@ -200,14 +207,6 @@ def quantile_drift_verdict(
         "at_quantile": worst_p,
         "status": "fail" if worst > rel_tolerance else "pass",
     }
-
-
-def collect_quantiles(
-    df: DataFrame, column: str, probs: list[float], accuracy: int = 10000
-) -> dict[str, float]:
-    row = quantiles(df.filter(F.col(column).isNotNull()), column, probs, accuracy).collect()[0]
-    vals = row["quantiles"] or []
-    return {str(p): float(v) for p, v in zip(probs, vals)}
 
 
 def grid_snapshot(row) -> dict:

@@ -34,25 +34,28 @@ class ColumnStatsSpec:
     exact_distinct: bool = False  # True only for small-scale oracle tests
 
 
-def stats_exprs(df: DataFrame, spec: ColumnStatsSpec) -> list[Column]:
+def stats_exprs(df: DataFrame, spec: ColumnStatsSpec, prefix: str = "") -> list[Column]:
+    """Global aggregates of ``spec.column``, named
+    ``<prefix><column>__<stat>``."""
     c = F.col(spec.column)
+    name = f"{prefix}{spec.column}__"
     out = [
-        F.count(F.lit(1)).alias(f"{spec.column}__count"),
-        F.avg(c.isNull().cast("double")).alias(f"{spec.column}__null_rate"),
-        F.min(c).alias(f"{spec.column}__min"),
-        F.max(c).alias(f"{spec.column}__max"),
+        F.count(F.lit(1)).alias(f"{name}count"),
+        F.avg(c.isNull().cast("double")).alias(f"{name}null_rate"),
+        F.min(c).alias(f"{name}min"),
+        F.max(c).alias(f"{name}max"),
     ]
     if spec.exact_distinct:
-        out.append(F.count_distinct(c).alias(f"{spec.column}__distinct"))
+        out.append(F.count_distinct(c).alias(f"{name}distinct"))
     else:
-        out.append(F.approx_count_distinct(c).alias(f"{spec.column}__distinct"))
+        out.append(F.approx_count_distinct(c).alias(f"{name}distinct"))
     dt = df.schema[spec.column].dataType
     if isinstance(dt, StringType):
-        out.append(F.avg(F.length(c)).alias(f"{spec.column}__avg_length"))
-        out.append(F.max(F.length(c)).alias(f"{spec.column}__max_length"))
+        out.append(F.avg(F.length(c)).alias(f"{name}avg_length"))
+        out.append(F.max(F.length(c)).alias(f"{name}max_length"))
     elif isinstance(dt, NumericType):
-        out.append(F.avg(c).alias(f"{spec.column}__avg"))
-        out.append(F.stddev_samp(c).alias(f"{spec.column}__stddev"))
+        out.append(F.avg(c).alias(f"{name}avg"))
+        out.append(F.stddev_samp(c).alias(f"{name}stddev"))
     return out
 
 

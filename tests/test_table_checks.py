@@ -89,6 +89,22 @@ def test_duplicate_keys_and_salted_equivalence(spark):
     assert hashed == plain
 
 
+def test_hashed_candidates_are_not_cached_for_the_session(spark):
+    """Sized without ``n_rows``, the candidate set is materialized once
+    for the join as a local checkpoint of the returned plan, which
+    Spark's context cleaner drops once that plan is garbage-collected.
+    Nothing enters the session's cache, where it would stay for the
+    session."""
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keySet())
+    df = spark.createDataFrame([("u1",), ("u2",), ("u1",)], "url string")
+    dups = duplicate_keys_hashed(df, ["url"], n_rows=None)
+    assert [(r["url"], r["dup_count"]) for r in dups.collect()] == [("u1", 2)]
+    rdds = sc._jsc.getPersistentRDDs()
+    new = [rdds.get(i).rdd() for i in set(rdds.keySet()) - before]
+    assert [r.isCheckpointed() for r in new] == [True]
+
+
 def test_distinct_rate(spark):
     df = spark.createDataFrame([("a",), ("b",), ("a",)], "k string")
     r = distinct_rate(df, ["k"], exact=True).collect()[0]

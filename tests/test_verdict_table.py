@@ -114,3 +114,91 @@ def test_column_stats_ids_name_their_check(spark):
     ids = sorted(r["constraint_id"] for r in res.table_violations.collect())
     assert ids == ["#/x-table-checks/n_hard/max_value", "#/x-table-checks/n_soft/max_value"]
     assert res.stats["n__max"] == 9
+
+
+#: every scalar table check kind: two ``column_stats`` (one exact), one
+#: ``quantile_drift`` and one ``tdigest_drift`` over a derived column
+SCALAR_CHECKS = [
+    {"id": "ts_stats", "kind": "column_stats", "column": "warc_ts", "max_null_rate": 0.0},
+    {"id": "url_stats", "kind": "column_stats", "column": "url", "exact_distinct": True},
+    {"id": "len_quantiles", "kind": "quantile_drift", "column": "text_len", "expr": "length(text)"},
+    {"id": "len_tdigest", "kind": "tdigest_drift", "column": "text_len", "expr": "length(text)"},
+]
+SCALAR_SPEC = {**SPEC, "x-table-checks": SCALAR_CHECKS}
+BARE_SPEC = {**SPEC, "x-table-checks": []}
+
+
+def _scalar_engine(spec: dict = SCALAR_SPEC) -> ValidationEngine:
+    return ValidationEngine(spec, id_cols=["url"], partition_cols=["lang"])
+
+
+@pytest.fixture(scope="module")
+def snapshot(pages):
+    return _scalar_engine().collect_snapshot(pages)
+
+
+def test_scalar_checks_share_one_aggregate(pages, snapshot, tmp_path, jobs_started):
+    """All four scalar checks are read off one global aggregate: a run
+    with them starts the jobs of a run with none plus those of one
+    ``agg(...).first()`` holding a ``count(DISTINCT)`` (3 jobs: the
+    distinct adds a shuffle stage), on both paths."""
+    from pyspark.sql import functions as F
+
+    one_agg = len(jobs_started(
+        lambda: pages.agg(F.count(F.lit(1)), F.count_distinct("url")).first()
+    ))
+    counts = {}
+    for name, call in [
+        ("lazy", lambda eng, out: eng.run(pages, snapshot=snapshot)),
+        ("single", lambda eng, out: eng.run_single_pass(pages, out, snapshot=snapshot)),
+    ]:
+        bare = len(jobs_started(lambda: call(_scalar_engine(BARE_SPEC), str(tmp_path / name / "bare"))))
+        scalar = len(jobs_started(lambda: call(_scalar_engine(), str(tmp_path / name / "scalar"))))
+        assert scalar - bare == one_agg, name
+        counts[name] = (bare, scalar)
+    assert one_agg == 3
+    assert counts == {"lazy": (2, 5), "single": (3, 6)}
+
+
+def test_run_and_single_pass_agree_on_scalar_checks(pages, snapshot, tmp_path):
+    eng = _scalar_engine()
+    lazy = eng.run(pages, snapshot=snapshot)
+    single = eng.run_single_pass(pages, str(tmp_path / "out"), snapshot=snapshot)
+    assert lazy.stats == single.stats
+    assert lazy.drift == single.drift
+    assert single.stats["url__distinct"] == pages.select("url").distinct().count()
+    assert {v["check_id"]: v["status"] for v in single.drift} == {
+        "len_quantiles": "pass",
+        "len_tdigest": "pass",
+    }
+
+
+@pytest.mark.parametrize("single_pass", [False, True], ids=["run", "run_single_pass"])
+def test_scalar_checks_on_an_empty_input(pages, snapshot, tmp_path, single_pass):
+    eng = _scalar_engine()
+    empty = pages.filter("false")
+    if single_pass:
+        res = eng.run_single_pass(empty, str(tmp_path / "out"), snapshot=snapshot)
+    else:
+        res = eng.run(empty, snapshot=snapshot)
+    assert res.stats["warc_ts__count"] == res.stats["url__count"] == 0
+    assert res.stats["url__distinct"] == 0
+    assert res.stats["warc_ts__min"] is None and res.stats["url__null_rate"] is None
+    drift = {v["check_id"]: v for v in res.drift}
+    assert drift["len_tdigest"]["status"] == "missing_current"
+    assert drift["len_quantiles"]["quantiles"] == {}
+
+
+def test_scalar_checks_on_an_all_null_column(pages, snapshot, tmp_path):
+    from pyspark.sql import functions as F
+
+    nulls = pages.withColumns(
+        {"warc_ts": F.lit(None).cast("timestamp"), "text": F.lit(None).cast("string")}
+    )
+    res = _scalar_engine().run_single_pass(nulls, str(tmp_path / "out"), snapshot=snapshot)
+    assert res.stats["warc_ts__null_rate"] == 1.0
+    assert res.stats["warc_ts__min"] is None and res.stats["warc_ts__max"] is None
+    assert res.stats["warc_ts__distinct"] == 0
+    assert {v["check_id"]: v["status"] for v in res.drift}["len_tdigest"] == "missing_current"
+    ids = [r["constraint_id"] for r in res.table_violations.collect()]
+    assert ids == ["#/x-table-checks/ts_stats/max_null_rate"]
