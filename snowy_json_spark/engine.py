@@ -11,12 +11,16 @@ Lifecycle (SURVEY.md §3.1 Spark equivalent):
            only by run_single_pass)
              → scalar checks (column_stats, quantile_drift,
                tdigest_drift): one global ``agg`` over the projection
-             → verdicts: one groupBy, collected once; the driver rows
-               feed the result, the manifest, write_results and the
-               uniqueness join's size bound
+             → verdicts: one groupBy by the partition columns plus any
+               histogram ``group_by`` column, carrying each histogram
+               drift check's bucket counts, collected once and merged
+               per partition key on the driver; the rows feed the
+               result, the manifest, write_results and the uniqueness
+               join's size bound, the summed counts the drift verdicts
              → violations (one explode), the other table checks over
                the projection → metrics
-             → checkpoint manifest append
+             → checkpoint manifest append (a parquet file written on
+               the driver, no job)
 
 Table-scope checks live under the spec's ``x-table-checks`` key (an
 engine extension — Snow has no table scope):
@@ -40,6 +44,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .operators.drift import (
     GRID_PROBS,
@@ -50,6 +55,7 @@ from .operators.drift import (
     drift_verdicts,
     grid_ks,
     grid_snapshot,
+    histogram_counts,
     quantile_aggs,
     quantile_drift_verdict,
 )
@@ -87,6 +93,10 @@ def _stats_spec(chk: dict) -> ColumnStatsSpec:
         max_distinct=chk.get("max_distinct"),
         exact_distinct=chk.get("exact_distinct", False),
     )
+
+
+def _hist_spec(chk: dict) -> HistogramSpec:
+    return HistogramSpec(chk["column"], chk["lo"], chk["hi"], chk.get("buckets", 20))
 
 
 def _check_values(row: dict, i: int) -> dict:
@@ -281,11 +291,15 @@ class ValidationEngine:
         snapshot: dict | None,
         n_rows: int,
         scalars: dict,
+        histograms: dict[int, dict[str, list[float]]],
     ) -> tuple[DataFrame | None, list[dict], dict]:
         """Table checks over the flagged projection ``df`` of ``n_rows``
         rows; schema contracts against the source ``schema``; the scalar
         checks read their values from ``scalars``, the row of
-        :meth:`_scalar_aggs` aggregated over that projection."""
+        :meth:`_scalar_aggs` aggregated over that projection, and the
+        histogram ``drift`` checks their current histograms from
+        ``histograms`` (check index → group → bucket counts, summed off
+        the verdict aggregate)."""
         spark = df.sparkSession
         tv_parts: list[DataFrame] = []
         drift_out: list[dict] = []
@@ -348,9 +362,6 @@ class ValidationEngine:
                         )
                     )
             elif kind == "drift":
-                hspec = HistogramSpec(
-                    chk["column"], chk["lo"], chk["hi"], chk.get("buckets", 20)
-                )
                 snap = (snapshot or {}).get(chk.get("id"))
                 th = DriftThresholds(
                     psi_warn=chk.get("psi_warn", 0.1),
@@ -360,28 +371,25 @@ class ValidationEngine:
                 if snap is None:
                     # no baseline entry → explicit status, never a
                     # self-compare 'pass' (round-3 ADVICE, applied to
-                    # every drift kind).  The current histogram is NOT
-                    # computed: collect_histogram is an eager full-scan
-                    # aggregation whose result would be discarded here
-                    # (r06 — this was a wasted job per drift check on
-                    # every snapshot-less run; guide §1.2 "don't compute
-                    # things you throw away")
+                    # every drift kind); the verdict aggregate left this
+                    # check's histogram out
                     drift_out.append(
                         {"group": None, "psi": None, "ks": None,
                          "status": "missing_snapshot",
                          "check_id": chk.get("id")}
                     )
                 else:
-                    cur = collect_histogram(df, hspec, chk.get("group_by"))
-                    for v in drift_verdicts(cur, snap, th):
+                    for v in drift_verdicts(histograms[i], snap, th):
                         v["check_id"] = chk.get("id")
                         drift_out.append(v)
             elif kind == "quantile_drift":
                 cur_q = _quantile_values(chk, _check_values(scalars, i))
                 snap_q = (snapshot or {}).get(chk.get("id"))
-                if snap_q is None:
+                if snap_q is None or not cur_q:
+                    # no baseline, or no non-null current value: an
+                    # emptied column must not pass with max_rel_diff 0
                     v = {"group": None, "psi": None, "ks": None,
-                         "status": "missing_snapshot"}
+                         "status": "missing_snapshot" if snap_q is None else "missing_current"}
                 else:
                     v = quantile_drift_verdict(
                         cur_q, snap_q, chk.get("rel_tolerance", 0.1)
@@ -496,15 +504,18 @@ class ValidationEngine:
         aggs = self._scalar_aggs(flagged, SCALAR_KINDS, snapshot or {})
         scalars = flagged.agg(*aggs).first().asDict() if aggs else {}
 
-        # the verdict table, aggregated once and held on the driver: one
-        # row per partition key (no partition columns → one global row),
-        # read by the manifest, the result, write_results and uniqueness
-        verdicts = flagged.groupBy(*self.partition_cols).agg(
-            *verdict_aggs(F.col("passed"))
+        # the verdict table, aggregated once and held on the driver, with
+        # the bucket counts of every histogram drift check alongside
+        hists = self._histogram_checks(snapshot)
+        group_cols = dict.fromkeys(self.partition_cols + [g for _, g in hists.values() if g])
+        grouped = flagged.groupBy(*group_cols).agg(
+            *verdict_aggs(F.col("passed")),
+            *[histogram_counts(h).alias(f"_hist{i}") for i, (h, _) in hists.items()],
         )
-        rows = verdicts.select(
+        rows = grouped.select(
             "*", partition_key_expr(self.partition_cols).alias("_partition_key")
         ).collect()
+        verdicts, histograms = self._merge_verdicts(rows, hists)
         viols = explode_violations(
             flagged.filter(F.size("violations") > 0), F.col("violations"), self.id_cols
         )
@@ -513,19 +524,77 @@ class ValidationEngine:
             df.schema,
             dims or {},
             snapshot,
-            sum(r["row_count"] for r in rows),
+            sum(v[-3] for v in verdicts.values()),
             scalars,
+            histograms,
         )
         if manifest is not None and self.partition_cols:
-            self._record_manifest(spark, rows, manifest)
+            self._record_manifest(spark, verdicts, manifest)
+        names = self.partition_cols + ["row_count", "failed_rows", "passed"]
         return ValidationResult(
-            verdicts=local_frame(spark, [r[:-1] for r in rows], verdicts.schema),
+            verdicts=local_frame(
+                spark,
+                [tuple(v) for v in verdicts.values()],
+                StructType([grouped.schema[c] for c in names]),
+            ),
             violations=viols,
             table_violations=table_viol,
             drift=drift_out,
             stats=stats_out,
             skipped_partitions=skipped,
         )
+
+    def _histogram_checks(
+        self, snapshot: dict | None
+    ) -> dict[int, tuple[HistogramSpec, str | None]]:
+        """(histogram, ``group_by``) of each histogram ``drift`` check
+        with a snapshot entry, by check index; a check without one
+        reports ``missing_snapshot`` and would discard its histogram."""
+        return {
+            i: (_hist_spec(chk), chk.get("group_by"))
+            for i, chk in enumerate(self.table_checks)
+            if chk.get("kind") == "drift"
+            and (snapshot or {}).get(chk.get("id")) is not None
+        }
+
+    def _merge_verdicts(
+        self, rows: list, hists: dict[int, tuple[HistogramSpec, str | None]]
+    ) -> tuple[dict[str, list], dict[int, dict[str, list[float]]]]:
+        """Merge the verdict aggregate's rows, grouped by the partition
+        columns plus any histogram ``group_by`` column, into one verdict
+        per partition key (partition values, ``row_count``,
+        ``failed_rows`` and ``passed``: summed, summed, ANDed) and each
+        histogram check's bucket counts per ``str(group)`` (``"_all"``
+        without ``group_by``), dropping all-zero groups as
+        :func:`collect_histogram` never sees them.  No partition columns
+        → one global verdict, also on an empty input."""
+        verdicts: dict[str, list] = {}
+        sums: dict[int, dict[str, list[int]]] = {i: {} for i in hists}
+        for r in rows:
+            v = verdicts.get(r["_partition_key"])
+            if v is None:
+                verdicts[r["_partition_key"]] = [
+                    *(r[c] for c in self.partition_cols),
+                    r["row_count"],
+                    r["failed_rows"],
+                    r["passed"],
+                ]
+            else:
+                v[-3] += r["row_count"]
+                v[-2] += r["failed_rows"]
+                v[-1] = v[-1] and r["passed"]
+            for i, (h, g) in hists.items():
+                acc = sums[i].setdefault(str(r[g]) if g else "_all", [0] * h.n_buckets)
+                for j, n in enumerate(r[f"_hist{i}"]):
+                    acc[j] += n
+        if not verdicts and not self.partition_cols:
+            # a global aggregate's row on an empty input
+            verdicts[""] = [0, None, None]
+        histograms = {
+            i: {k: [float(n) for n in c] for k, c in s.items() if any(c)}
+            for i, s in sums.items()
+        }
+        return verdicts, histograms
 
     # ------------------------------------------------------------------
     def _apply_resume(
@@ -553,25 +622,27 @@ class ValidationEngine:
         return df.filter(keyx.isin(pending)), skipped, None
 
     def _record_manifest(
-        self, spark: SparkSession, rows: list, manifest: Manifest
+        self, spark: SparkSession, verdicts: dict[str, list], manifest: Manifest
     ) -> None:
-        """Append a lineage record per collected verdict row.
+        """Append a lineage record per merged verdict.
 
-        Each row's key was collected as a Spark column: ``_apply_resume``
+        Each key was collected as a Spark column: ``_apply_resume``
         matches manifest keys against the same ``partition_key_expr``, so
         both sides share one string form (``true``, ``1.0E20``, ``…00.5``)."""
-        keyed = [
-            {
-                "partition_key": r["_partition_key"],
-                "lineage_hash": lineage_hash(self.spec, r["_partition_key"]),
-                "status": "validated",
-                "row_count": r["row_count"],
-                "failed_rows": r["failed_rows"],
-                "passed": r["passed"],
-            }
-            for r in rows
-        ]
-        manifest.append(spark, keyed)
+        manifest.append(
+            spark,
+            [
+                {
+                    "partition_key": key,
+                    "lineage_hash": lineage_hash(self.spec, key),
+                    "status": "validated",
+                    "row_count": v[-3],
+                    "failed_rows": v[-2],
+                    "passed": v[-1],
+                }
+                for key, v in verdicts.items()
+            ],
+        )
 
     # ------------------------------------------------------------------
     def collect_snapshot(self, df: DataFrame) -> dict:
@@ -589,10 +660,7 @@ class ValidationEngine:
         for i, chk in enumerate(self.table_checks):
             kind = chk.get("kind")
             if kind == "drift":
-                hspec = HistogramSpec(
-                    chk["column"], chk["lo"], chk["hi"], chk.get("buckets", 20)
-                )
-                snap[chk["id"]] = collect_histogram(src, hspec, chk.get("group_by"))
+                snap[chk["id"]] = collect_histogram(src, _hist_spec(chk), chk.get("group_by"))
             elif kind == "quantile_drift":
                 snap[chk["id"]] = _quantile_values(chk, _check_values(row, i))
             elif kind == "tdigest_drift":

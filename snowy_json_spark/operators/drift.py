@@ -8,6 +8,8 @@ Scale design:
 - Histograms are fixed-bucket (``floor((x - lo) / width)``) so they
   aggregate with one partial-agg shuffle of at most ``n_buckets`` rows
   per group — mergeable across partitions and across resumable runs.
+  The engine reads them as ``histogram_counts`` arrays off its verdict
+  ``groupBy`` and sums them on the driver: no job of their own.
   (Deliberately floor-arithmetic, not ``width_bucket``, so the DuckDB
   oracle can evaluate the identical expression.)
 - Quantiles via ``percentile_approx`` (single-pass, mergeable GK
@@ -70,6 +72,16 @@ def histogram(
         .groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("bucket_count"))
     )
+
+
+def histogram_counts(spec: HistogramSpec) -> Column:
+    """One aggregate: the array of ``n_buckets`` bucket counts of
+    ``spec.column`` in the group, nulls not counted.  Counts add across
+    groups, so a histogram by any coarser key is their sum on the
+    driver; it rides any ``groupBy`` the caller already runs."""
+    c = F.col(spec.column)
+    bucket = F.when(c.isNotNull(), bucket_expr(spec, c))
+    return F.array(*[F.count(F.when(bucket == j, 1)) for j in range(spec.n_buckets)])
 
 
 def quantile_aggs(
